@@ -8,18 +8,18 @@ is the one custom scalar kernel the ingest path needs. It is a
 rather than a row-at-a-time udf — the only Python hot path in the
 engine's ingest pipeline.
 
-``gzip_bytes`` is the test-only inverse (reference utils.py:24-29),
-used by fixture builders.
+Fixtures build the inverse with the stdlib's
+``gzip.compress(data, mtime=0)`` (reference utils.py:24-29).
 """
 
 from __future__ import annotations
 
 import gzip
-import io
+import zlib
 
 import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType, StringType
+from pyspark.sql.types import StringType
 
 
 @F.pandas_udf(StringType())
@@ -37,44 +37,18 @@ def gunzip_text(data: pd.Series) -> pd.Series:
 def gunzip_text_safe(data: pd.Series) -> pd.Series:
     """PERMISSIVE gunzip: corrupt/undecodable blobs -> null instead of
     failing the task. At 100 TB a single truncated record must not
-    kill a 6-hour job; nulls flow to the ingest dead-letter filter."""
+    kill a 6-hour job; the nulls are dropped by ``decode_envelope``'s
+    DATA_MESSAGE filter.
+
+    A bad gzip header or trailer raises ``OSError``/``EOFError``, but
+    a corrupt deflate body raises ``zlib.error``, which is neither."""
 
     def _safe(b) -> str | None:
         if b is None:
             return None
         try:
             return gzip.decompress(bytes(b)).decode("utf-8")
-        except (OSError, EOFError, UnicodeDecodeError):
+        except (OSError, EOFError, zlib.error, UnicodeDecodeError):
             return None
 
     return data.map(_safe)
-
-
-@F.pandas_udf(BinaryType())
-def gunzip_blob(data: pd.Series) -> pd.Series:
-    """gunzip(blob) -> raw bytes."""
-    return data.map(lambda b: gzip.decompress(bytes(b)))
-
-
-@F.pandas_udf(BinaryType())
-def gzip_blob(data: pd.Series) -> pd.Series:
-    """gzip(bytes) -> blob; test-only inverse (reference utils.py:24-29).
-
-    mtime pinned to 0 so output bytes are deterministic.
-    """
-
-    def _gz(raw: bytes) -> bytes:
-        buf = io.BytesIO()
-        with gzip.GzipFile(fileobj=buf, mode="wb", mtime=0) as fobj:
-            fobj.write(bytes(raw))
-        return buf.getvalue()
-
-    return data.map(_gz)
-
-
-def gzip_compress(raw: bytes) -> bytes:
-    """Driver-side helper for building fixtures (deterministic mtime=0)."""
-    buf = io.BytesIO()
-    with gzip.GzipFile(fileobj=buf, mode="wb", mtime=0) as fobj:
-        fobj.write(raw)
-    return buf.getvalue()

@@ -42,9 +42,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 from kinesis_logs_reader_spark.sources.envelope import (
     decode_envelope,
+    flow_log_rows,
     read_cwl_batch,
     read_cwl_stream,
-    typed_flow_logs,
 )
 
 
@@ -219,8 +219,7 @@ class KinesisLogsReader:
             raw = self.spark.createDataFrame(
                 [(b,) for b in blobs], "data binary"
             )
-            events = decode_envelope(raw)
-            self.df: DataFrame = typed_flow_logs(events) if typed else events
+            self.df: DataFrame = flow_log_rows(decode_envelope(raw), typed)
         elif path is not None:
             # start_time -> modifiedAfter: the AT_TIMESTAMP analog for replay
             self.df = read_cwl_batch(

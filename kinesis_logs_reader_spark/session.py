@@ -106,79 +106,47 @@ def build_session(
     shuffle bytes never cross a network and lz4 is pure CPU overhead —
     a cluster deployment keeps the compression default).
     """
-    builder = SparkSession.builder.appName(app_name)
+    defaults: dict[str, str] = {}
     if master:
-        builder = builder.config("spark.master", master)
+        defaults["spark.master"] = master
         # local[N] runs driver + all executor threads in ONE JVM whose
         # heap defaults to 1g — the r7 sf~1 soak OOM'd it (166 queries'
         # session caches + sort buffers on 32 threads). A max-heap cap,
         # not a reservation: only set for explicitly-local sessions;
-        # spark-submit / cluster managers own it otherwise. extra_conf
-        # still overrides (applied later).
-        builder = builder.config("spark.driver.memory", driver_memory)
-    builder = (
-        builder
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.sql.parquet.aggregatePushdown", "true")
-        .config("spark.ui.enabled", "false")
+        # spark-submit / cluster managers own it otherwise.
+        defaults["spark.driver.memory"] = driver_memory
+    defaults.update({
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.parquet.filterPushdown": "true",
+        "spark.sql.parquet.aggregatePushdown": "true",
+        "spark.ui.enabled": "false",
         # Headless-engine listener posture (r15 floor work): the UI is
         # off above, so console progress repaints and per-task live
         # status-store writes have no reader — they only add driver
         # listener work to every one of the engine's (many, small)
         # jobs. Interleaved floor A/B: 1-row-job mean 24.9 -> 21.9 ms.
         # All overridable via extra_conf for an interactive deployment.
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.ui.liveUpdate.period", "-1")
-        .config("spark.ui.retainedJobs", "64")
-        .config("spark.ui.retainedStages", "64")
-        .config("spark.ui.retainedTasks", "1000")
+        "spark.ui.showConsoleProgress": "false",
+        "spark.ui.liveUpdate.period": "-1",
+        "spark.ui.retainedJobs": "64",
+        "spark.ui.retainedStages": "64",
+        "spark.ui.retainedTasks": "1000",
         # Python worker handshake can exceed the 15s default when the
         # machine is saturated (e.g. a bench run beside the test suite);
         # a longer window only matters in that contended case.
-        .config("spark.python.auth.socketTimeout", "120s")
-    )
-    for k, v in _RUNTIME_CONF.items():
-        builder = builder.config(k, v)
-    # extra_conf LAST: the caller's deployment profile overrides the
-    # defaults above (e.g. bench.py's AQE-off local profile) — applied
-    # after _RUNTIME_CONF so an override isn't silently clobbered.
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    # Runtime re-assertion (covers a pre-existing session getOrCreate
-    # returned), still honoring extra_conf precedence. Includes the
-    # builder-block SQL confs that ARE runtime-settable (shuffle
-    # partitions, arrow, parquet pushdown) so a reused session actually
-    # gets the requested profile — e.g. bench.py's 8-partition local
-    # profile; non-settable ones (spark.master, ui, socket timeout)
-    # no-op via the except guard.
-    _builder_sql_conf = {
-        "spark.sql.shuffle.partitions": str(shuffle_partitions),
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.sql.parquet.filterPushdown": "true",
-        "spark.sql.parquet.aggregatePushdown": "true",
-    }
-    for k, v in _builder_sql_conf.items():
-        if k in (extra_conf or {}):
-            continue
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass
-    for k, v in _RUNTIME_CONF.items():
-        if k in (extra_conf or {}):
-            continue
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass
-    for k, v in (extra_conf or {}).items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass  # deployment-time conf (non-runtime-settable)
+        "spark.python.auth.socketTimeout": "120s",
+    })
+    # Precedence: builder defaults < _RUNTIME_CONF < extra_conf, so the
+    # caller's deployment profile (e.g. bench.py's AQE-off local profile)
+    # is never clobbered. Applied once: getOrCreate hands the options to
+    # a fresh session at construction and, when a session is already
+    # running, applies every runtime-modifiable one to it
+    # (applyModifiableSettings) — a reused session gets the requested
+    # profile; static conf (spark.master, ui, socket timeout) only takes
+    # effect on a fresh context.
+    conf = {**defaults, **_RUNTIME_CONF, **(extra_conf or {})}
+    spark = SparkSession.builder.appName(app_name).config(map=conf).getOrCreate()
     # Mark configured so load_table's configure_runtime() won't re-apply
     # _RUNTIME_CONF over the caller's overrides.
     spark.__dict__["_klrs_runtime_configured"] = True

@@ -36,7 +36,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from kinesis_logs_reader_spark.functions.gzip_udfs import gunzip_text
+from kinesis_logs_reader_spark.functions.gzip_udfs import gunzip_text, gunzip_text_safe
 
 # Envelope of a CWL subscription record (kinesis_logs_reader.py:91-95;
 # fixture builder tests/test_kinesis_logs_reader.py:35-45).
@@ -101,8 +101,6 @@ def decode_envelope(
       vanish instead of killing the job (malformed JSON is already
       null under from_json's default PERMISSIVE mode).
     """
-    from kinesis_logs_reader_spark.functions.gzip_udfs import gunzip_text_safe
-
     gunzip = gunzip_text_safe if mode == "permissive" else gunzip_text
     parsed = raw.withColumn(
         "envelope", F.from_json(gunzip(F.col(data_col)), ENVELOPE_SCHEMA)
@@ -134,6 +132,18 @@ def typed_flow_logs(events: DataFrame, fields: list[tuple[str, str]] | None = No
     return events.select(*cols)
 
 
+def flow_log_rows(
+    events: DataFrame, typed: bool, fields: list[tuple[str, str]] | None = None
+) -> DataFrame:
+    """The tail every ingest route shares: typed columns, or the untyped
+    ``fields`` map the reference-compatible facade iterates."""
+    return typed_flow_logs(events, fields) if typed else events
+
+
+# One gzipped envelope blob per ``*.gz`` file, shard subdirectories included.
+_BLOB_FILE_OPTIONS = {"pathGlobFilter": "*.gz", "recursiveFileLookup": "true"}
+
+
 def read_cwl_batch(
     spark: SparkSession,
     path: str,
@@ -149,18 +159,13 @@ def read_cwl_batch(
     mtime is after it are read (binaryFile ``modifiedAfter`` — pruned at
     file-listing time, the batch analog of a positioned shard open).
     """
-    reader = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.gz")
-        .option("recursiveFileLookup", "true")
-    )
+    reader = spark.read.format("binaryFile").options(**_BLOB_FILE_OPTIONS)
     if start_time is not None:
         reader = reader.option(
             "modifiedAfter", start_time.strftime("%Y-%m-%dT%H:%M:%S")
         )
     raw = reader.load(path).select(F.col("content").alias("data"))
-    events = decode_envelope(raw, mode=mode)
-    return typed_flow_logs(events, fields) if typed else events
+    return flow_log_rows(decode_envelope(raw, mode=mode), typed, fields)
 
 
 def read_cwl_stream(
@@ -202,13 +207,11 @@ def read_cwl_stream(
         reader = (
             spark.readStream.format("binaryFile")
             .schema(binary_file_schema)
-            .option("pathGlobFilter", "*.gz")
-            .option("recursiveFileLookup", "true")
+            .options(**_BLOB_FILE_OPTIONS)
         )
         if max_files_per_trigger:
             reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
         raw = reader.load(path).select(F.col("content").alias("data"))
     else:
         raise ValueError("need path= (file replay) or kinesis_options=")
-    events = decode_envelope(raw, mode=mode)
-    return typed_flow_logs(events, fields) if typed else events
+    return flow_log_rows(decode_envelope(raw, mode=mode), typed, fields)

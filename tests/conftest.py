@@ -8,7 +8,6 @@ end-to-end CLI checks against captured stdout.
 
 from __future__ import annotations
 
-import io
 import gzip
 import json
 import sys
@@ -33,10 +32,7 @@ def spark():
 
 def gz_blob(obj) -> bytes:
     """Deterministic gzip of a JSON envelope (reference utils.py:24-29)."""
-    buf = io.BytesIO()
-    with gzip.GzipFile(fileobj=buf, mode="wb", mtime=0) as f:
-        f.write(json.dumps(obj).encode())
-    return buf.getvalue()
+    return gzip.compress(json.dumps(obj).encode(), mtime=0)
 
 
 def make_event(i: int) -> dict:
@@ -69,7 +65,7 @@ def control_message() -> dict:
 def envelope_dir(tmp_path_factory) -> str:
     """2 shards, control message first on shard0, rows split across pages,
     one empty page — the layout FIXTURES.md prescribes."""
-    root = tmp_path_factory.mktemp("cwl_envelopes")
+    root = tmp_path_factory.mktemp("cwl_blobs")
     (root / "shard0").mkdir()
     (root / "shard1").mkdir()
     (root / "shard0" / "p0.gz").write_bytes(gz_blob(control_message()))

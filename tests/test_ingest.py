@@ -7,29 +7,34 @@ order-insensitive row-set equality (:192-195), golden TSV header/rows
 
 from __future__ import annotations
 
+import gzip
 import io
+import zlib
 
 from pyspark.sql import functions as F
 
 from kinesis_logs_reader_spark.cli import print_stream
-from kinesis_logs_reader_spark.functions.gzip_udfs import gzip_compress, gunzip_text, gzip_blob, gunzip_blob
+from kinesis_logs_reader_spark.functions.gzip_udfs import gunzip_text
 from kinesis_logs_reader_spark.reader import KinesisLogsReader
 from kinesis_logs_reader_spark.sources.envelope import read_cwl_batch
 
-from tests.conftest import make_event
+from tests.conftest import data_message, gz_blob, make_event
 
 
 def test_gunzip_roundtrip(spark):
-    """gunzip(gzip(x)) == x — reference tests:121-123, as Spark columns."""
-    payloads = [b"hello world", b"", b'{"k": 1}']
-    df = spark.createDataFrame([(p,) for p in payloads], "raw binary")
-    out = df.select(gunzip_blob(gzip_blob(F.col("raw"))).alias("rt")).collect()
-    assert [bytes(r.rt) for r in out] == payloads
+    """gunzip(gzip(x)) == x — reference tests:121-123, through the
+    engine's gunzip kernel as a Spark column."""
+    payloads = ["hello world", "", '{"k": 1}']
+    df = spark.createDataFrame(
+        [(gzip.compress(p.encode(), mtime=0),) for p in payloads], "data binary"
+    )
+    out = df.select(gunzip_text(F.col("data")).alias("rt")).collect()
+    assert [r.rt for r in out] == payloads
 
 
 def test_golden_gunzip(spark):
     """Golden-bytes decompress (reference tests:112-119)."""
-    blob = gzip_compress(b"flow log line")
+    blob = gzip.compress(b"flow log line", mtime=0)
     df = spark.createDataFrame([(blob,)], "data binary")
     [row] = df.select(gunzip_text(F.col("data")).alias("t")).collect()
     assert row.t == "flow log line"
@@ -82,8 +87,6 @@ def test_start_time_positioned_read(spark, tmp_path):
     import os
     from datetime import datetime
 
-    from tests.conftest import data_message, gz_blob
-
     src = tmp_path / "timed"
     src.mkdir()
     old = src / "old.gz"
@@ -102,19 +105,36 @@ def test_start_time_positioned_read(spark, tmp_path):
     assert {r.srcport for r in positioned.collect()} == {1025}
 
 
-def test_permissive_mode_drops_corrupt_records(spark, tmp_path):
-    """PERMISSIVE ingest: corrupt gzip and malformed JSON vanish;
-    valid records survive. Strict mode (reference semantics) fails."""
-    import pytest
+def _deflate_corrupt_blob() -> bytes:
+    """A gzipped envelope with one bit of its deflate body flipped, the
+    first such flip for which ``gzip.decompress`` raises ``zlib.error``
+    (not an ``OSError``: the header and trailer are intact)."""
+    good = gz_blob(data_message([make_event(2)]))
+    for bit in range(10 * 8, (len(good) - 8) * 8):  # skip header, trailer
+        bad = bytearray(good)
+        bad[bit // 8] ^= 1 << (bit % 8)
+        try:
+            gzip.decompress(bytes(bad))
+        except zlib.error:
+            return bytes(bad)
+        except (OSError, EOFError):
+            continue
+    raise AssertionError("no bit flip raises zlib.error")
 
-    from kinesis_logs_reader_spark.functions.gzip_udfs import gzip_compress
-    from tests.conftest import data_message, gz_blob
+
+def test_permissive_mode_drops_corrupt_records(spark, tmp_path):
+    """PERMISSIVE ingest: corrupt gzip (bad header, or a corrupt deflate
+    body raising zlib.error) and malformed JSON vanish; valid records
+    survive. Strict mode (reference semantics) fails."""
+    import pytest
 
     src = tmp_path / "dirty"
     src.mkdir()
     (src / "good.gz").write_bytes(gz_blob(data_message([make_event(1)])))
     (src / "corrupt.gz").write_bytes(b"\x1f\x8b\x08\x00BROKEN")
-    (src / "notjson.gz").write_bytes(gzip_compress(b"this is not json"))
+    bitflip = _deflate_corrupt_blob()
+    (src / "bitflip.gz").write_bytes(bitflip)
+    (src / "notjson.gz").write_bytes(gzip.compress(b"this is not json", mtime=0))
 
     ok = read_cwl_batch(spark, str(src), typed=False, mode="permissive")
     rows = [dict(r["fields"]) for r in ok.collect()]
@@ -123,6 +143,12 @@ def test_permissive_mode_drops_corrupt_records(spark, tmp_path):
     strict = read_cwl_batch(spark, str(src), typed=False, mode="strict")
     with pytest.raises(Exception):
         strict.collect()
+
+    flipped = tmp_path / "bitflip"
+    flipped.mkdir()
+    (flipped / "bitflip.gz").write_bytes(bitflip)
+    with pytest.raises(Exception, match="zlib.error"):
+        read_cwl_batch(spark, str(flipped), typed=False, mode="strict").collect()
 
 
 def test_streaming_ingest_available_now(spark, envelope_dir, tmp_path):
@@ -144,13 +170,42 @@ def test_streaming_ingest_available_now(spark, envelope_dir, tmp_path):
     assert [r.srcport for r in got] == [1024, 1025, 1026, 1027, 1028]
 
 
+def test_stream_replay_one_file_per_trigger(spark, envelope_dir, tmp_path):
+    """max_files_per_trigger=1 under availableNow: one micro-batch per
+    blob file (the control message and the empty page included), and the
+    union of the batches is exactly the batch replay's rows."""
+    from kinesis_logs_reader_spark.sources.envelope import read_cwl_stream
+
+    batches: dict[int, list[tuple]] = {}
+
+    def collect(df, batch_id):
+        batches[batch_id] = [tuple(r) for r in df.collect()]
+
+    stream = read_cwl_stream(
+        spark, path=envelope_dir, typed=True, max_files_per_trigger=1
+    )
+    q = (
+        stream.writeStream.foreachBatch(collect)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert sorted(batches) == [0, 1, 2, 3, 4]  # 5 blob files
+    streamed = sorted((r for rows in batches.values() for r in rows), key=str)
+    replayed = sorted(
+        (tuple(r) for r in read_cwl_batch(spark, envelope_dir).collect()), key=str
+    )
+    assert len(replayed) == 5 and streamed == replayed
+
+
 def _mock_kinesis_client():
     """boto3-client mock with the reference's own fixture topology
     (tests/test_kinesis_logs_reader.py:62-101): 2 shards, a control
     message, one shard needing two get_records pages."""
     from unittest.mock import MagicMock
 
-    from tests.conftest import control_message, data_message, gz_blob, make_event
+    from tests.conftest import control_message
 
     describe = {
         "StreamDescription": {
@@ -204,6 +259,18 @@ def test_reader_with_injected_client(spark):
         key=lambda d: d["srcport"],
     )
     assert rows == expected
+
+
+def test_reader_with_injected_client_typed(spark):
+    """typed=True on the client route casts through the same tail as
+    path replay: ints are ints, fields the events lack are null."""
+    reader = KinesisLogsReader(
+        "test-stream", kinesis_client=_mock_kinesis_client(), spark=spark,
+        typed=True,
+    )
+    rows = sorted(reader, key=lambda d: d["srcport"])
+    assert [r["srcport"] for r in rows] == [1024, 1025, 1026, 1027, 1028]
+    assert rows[0]["dstport"] == 443 and rows[0]["bytes"] is None
 
 
 def test_reader_next_protocol(spark):

@@ -1,7 +1,8 @@
 """Checkpoint recovery: restarting from the same checkpoint must
 process only new data (exactly-once source accounting) — the streaming
 analog of the reference's iterator-advance state
-(kinesis_logs_reader.py:83)."""
+(kinesis_logs_reader.py:83). Both tests read through the production
+chain, ``read_cwl_stream`` file replay, untyped (the ``fields`` map)."""
 
 from __future__ import annotations
 
@@ -9,18 +10,16 @@ import glob
 
 from pyspark.sql import functions as F
 
-from kinesis_logs_reader_spark.sources import python_datasource
+from kinesis_logs_reader_spark.sources.envelope import read_cwl_stream
 from kinesis_logs_reader_spark.streaming import jobs
 
-from tests.conftest import control_message, data_message, gz_blob, make_event
+from tests.conftest import data_message, gz_blob, make_event
 
 
 def _run_parquet_sink(spark, src_dir, ckpt, out):
     """File sink: the fault-tolerant sink that supports checkpoint
     restart (memory sink does not)."""
-    stream = (
-        spark.readStream.format("cwl_envelope").option("path", str(src_dir)).load()
-    )
+    stream = read_cwl_stream(spark, path=str(src_dir), typed=False)
     q = (
         stream.select(F.col("fields")["srcport"].cast("int").alias("srcport"))
         .writeStream.format("parquet")
@@ -35,7 +34,6 @@ def _run_parquet_sink(spark, src_dir, ckpt, out):
 
 
 def test_custom_source_checkpoint_recovery(spark, tmp_path):
-    python_datasource.register(spark)
     src = tmp_path / "stream_src"
     (src / "shard0").mkdir(parents=True)
     ckpt = tmp_path / "ckpt"
@@ -48,23 +46,20 @@ def test_custom_source_checkpoint_recovery(spark, tmp_path):
     assert _run_parquet_sink(spark, src, ckpt, out) == [1024, 1025]
 
     # epoch 2: one more file lands; restart from the SAME checkpoint —
-    # only the new file's rows may flow (offsets restored), so the sink
-    # grows by exactly one row, no reprocessing
+    # only the new file's rows may flow (seen files restored from the
+    # source log), so the sink grows by exactly one row, no reprocessing
     (src / "shard0" / "p1.gz").write_bytes(gz_blob(data_message([make_event(2)])))
     assert _run_parquet_sink(spark, src, ckpt, out) == [1024, 1025, 1026]
 
 
 def test_foreach_batch_tsv_sink(spark, tmp_path):
     """H8/foreachBatch: microbatch TSV output with reference semantics."""
-    python_datasource.register(spark)
     src = tmp_path / "fb_src"
     (src / "shard0").mkdir(parents=True)
     (src / "shard0" / "p0.gz").write_bytes(
         gz_blob(data_message([make_event(0), make_event(1)]))
     )
-    stream = (
-        spark.readStream.format("cwl_envelope").option("path", str(src)).load()
-    )
+    stream = read_cwl_stream(spark, path=str(src), typed=False)
     typed = stream.select(
         F.col("fields")["srcaddr"].alias("srcaddr"),
         F.col("fields")["srcport"].cast("int").alias("srcport"),
