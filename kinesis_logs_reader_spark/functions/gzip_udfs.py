@@ -2,11 +2,11 @@
 
 The reference gunzips each Kinesis record's ``Data`` blob row-at-a-time
 in Python (reference kinesis_logs_reader/utils.py:18-21, called from
-kinesis_logs_reader.py:87-88). Spark has no builtin SQL gunzip, so this
-is the one custom scalar kernel the ingest path needs. It is a
-``pandas_udf`` (Arrow batch transfer, one Python call per ~10k rows)
-rather than a row-at-a-time udf — the only Python hot path in the
-engine's ingest pipeline.
+kinesis_logs_reader.py:87-88). File replay needs no kernel: Hadoop's
+gzip codec decompresses inside Spark's JSON scan. A binary column (the
+boto3 drain, the Kinesis connector) has no SQL gunzip, so these kernels
+serve those routes only. Each is a ``pandas_udf`` (Arrow batch transfer,
+one Python call per ~10k rows) rather than a row-at-a-time udf.
 
 Fixtures build the inverse with the stdlib's
 ``gzip.compress(data, mtime=0)`` (reference utils.py:24-29).
@@ -37,8 +37,8 @@ def gunzip_text(data: pd.Series) -> pd.Series:
 def gunzip_text_safe(data: pd.Series) -> pd.Series:
     """PERMISSIVE gunzip: corrupt/undecodable blobs -> null instead of
     failing the task. At 100 TB a single truncated record must not
-    kill a 6-hour job; the nulls are dropped by ``decode_envelope``'s
-    DATA_MESSAGE filter.
+    kill a 6-hour job; a null parses to a null envelope, which has no
+    events.
 
     A bad gzip header or trailer raises ``OSError``/``EOFError``, but
     a corrupt deflate body raises ``zlib.error``, which is neither."""

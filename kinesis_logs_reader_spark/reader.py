@@ -42,7 +42,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from kinesis_logs_reader_spark.sources.envelope import (
     decode_envelope,
-    flow_log_rows,
     read_cwl_batch,
     read_cwl_stream,
 )
@@ -219,7 +218,7 @@ class KinesisLogsReader:
             raw = self.spark.createDataFrame(
                 [(b,) for b in blobs], "data binary"
             )
-            self.df: DataFrame = flow_log_rows(decode_envelope(raw), typed)
+            self.df: DataFrame = decode_envelope(raw, typed=typed)
         elif path is not None:
             # start_time -> modifiedAfter: the AT_TIMESTAMP analog for replay
             self.df = read_cwl_batch(

@@ -5,29 +5,25 @@ The reference's entire dataflow (kinesis_logs_reader.py:79-104) is:
     poll shard -> gunzip Data -> json parse -> drop CONTROL_MESSAGE
     -> flatten logEvents -> project extractedFields
 
-Here that is one declarative DataFrame chain over either a batch or a
-streaming source of raw gzipped-JSON blobs:
+Here that is one declarative DataFrame chain, batch or streaming: a parse
+(R5 gunzip, R6 JSON) into the columns of ``envelope_schema``, then the
+tail every route shares (``flow_log_rows``: strict-mode check -> R7
+DATA_MESSAGE test -> R8 explode -> R9 project -> optional typed cast).
+Two parses feed it:
 
-    load -> gunzip_text (pandas UDF, R5) -> from_json(envelope) (R6)
-    -> filter messageType == 'DATA_MESSAGE' (R7, kinesis_logs_reader.py:91-92)
-    -> explode(logEvents) (R8, kinesis_logs_reader.py:94)
-    -> select extractedFields (R9, kinesis_logs_reader.py:95)
-    -> optional cast to the typed VPC-flow-log schema (README.md:31-35)
+- file routes (``read_cwl_batch``, ``read_cwl_stream(path=)``): Spark's
+  JSON source over ``*.gz`` files, one envelope per file (``multiLine``).
+  Hadoop's gzip codec decompresses and Jackson parses inside the scan, so
+  no Python worker runs. One file <-> one Kinesis record;
+  directories-per-shard replay shard interleaving.
+- binary-column routes (``decode_envelope``: the boto3 drain in
+  ``KinesisLogsReader``, or a Kinesis connector's ``data: binary``
+  column): the ``gunzip_text`` pandas UDF, then ``from_json`` with the
+  same schema. One Kinesis shard maps to one input partition, mirroring
+  the reference's shard model (kinesis_logs_reader.py:61-66).
 
-Catalyst orders the filter before the explode (generate) exactly as the
-reference hand-orders it, and prunes the envelope columns immediately
-after the project — for free.
-
-Sources:
-- hermetic tests/CI: a directory of ``*.gz`` files, one blob per file
-  (binaryFile source), or any DataFrame with a binary ``data`` column.
-  One file <-> one Kinesis record; directories-per-shard replays shard
-  interleaving.
-- production: Spark's Kinesis connector (e.g. spark-sql-kinesis-asl)
-  yields the same ``data: binary`` column; ``read_cwl_stream`` accepts
-  its options pass-through. One Kinesis shard maps to one input
-  partition, mirroring the reference's shard model
-  (kinesis_logs_reader.py:61-66).
+As in the reference, a dropped record is never flattened, and Catalyst
+prunes the envelope columns immediately after the project.
 """
 
 from __future__ import annotations
@@ -37,34 +33,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kinesis_logs_reader_spark.functions.gzip_udfs import gunzip_text, gunzip_text_safe
-
-# Envelope of a CWL subscription record (kinesis_logs_reader.py:91-95;
-# fixture builder tests/test_kinesis_logs_reader.py:35-45).
-ENVELOPE_SCHEMA = T.StructType(
-    [
-        T.StructField("messageType", T.StringType()),
-        T.StructField("owner", T.StringType()),
-        T.StructField("logGroup", T.StringType()),
-        T.StructField("logStream", T.StringType()),
-        T.StructField("subscriptionFilters", T.ArrayType(T.StringType())),
-        T.StructField(
-            "logEvents",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("id", T.StringType()),
-                        T.StructField("timestamp", T.LongType()),
-                        T.StructField("message", T.StringType()),
-                        T.StructField(
-                            "extractedFields",
-                            T.MapType(T.StringType(), T.StringType()),
-                        ),
-                    ]
-                )
-            ),
-        ),
-    ]
-)
 
 # Typed VPC Flow Logs schema (reference README.md:31-35; SURVEY.md §2.3).
 FLOW_LOG_FIELDS: list[tuple[str, str]] = [
@@ -84,88 +52,131 @@ FLOW_LOG_FIELDS: list[tuple[str, str]] = [
     ("log_status", "string"),
 ]
 
+# The parsers' (JSON source and from_json) column for a record that is
+# not valid JSON; spark.sql.columnNameOfCorruptRecord's default.
+CORRUPT_RECORD = "_corrupt_record"
 
-def decode_envelope(
-    raw: DataFrame, data_col: str = "data", mode: str = "strict"
-) -> DataFrame:
-    """gzipped-JSON blob column -> one row per log event (map column).
 
-    Implements R5-R9 of the reference pipeline declaratively. Works on
-    both batch and streaming DataFrames.
+def envelope_schema(typed: bool) -> T.StructType:
+    """The part of a CWL subscription record the pipeline reads
+    (kinesis_logs_reader.py:91-95), plus the corrupt-record column.
 
-    ``mode``:
-    - ``strict`` (reference semantics — its package has no try/except):
-      corrupt gzip fails the task;
-    - ``permissive``: corrupt gzip -> null text -> ``from_json`` null
-      envelope -> dropped by the DATA_MESSAGE filter, so bad records
-      vanish instead of killing the job (malformed JSON is already
-      null under from_json's default PERMISSIVE mode).
+    ``typed``: ``extractedFields`` is a struct of the ``FLOW_LOG_FIELDS``
+    names, all strings, cast once in the tail. Otherwise it is a
+    ``map<string,string>``, so the reference facade keeps every key,
+    flow-log field or not. Either way a JSON number reads as its text.
     """
-    gunzip = gunzip_text_safe if mode == "permissive" else gunzip_text
-    parsed = raw.withColumn(
-        "envelope", F.from_json(gunzip(F.col(data_col)), ENVELOPE_SCHEMA)
+    fields = (
+        T.StructType([T.StructField(name, T.StringType()) for name, _ in FLOW_LOG_FIELDS])
+        if typed
+        else T.MapType(T.StringType(), T.StringType())
     )
-    return (
-        parsed
-        # R7: control messages dropped (kinesis_logs_reader.py:91-92);
-        # null envelopes (permissive corrupt records) drop here too
-        .filter(F.col("envelope.messageType") == "DATA_MESSAGE")
-        # R8: flatten (kinesis_logs_reader.py:94)
-        .select(F.explode("envelope.logEvents").alias("event"))
-        # R9: project the logical row (kinesis_logs_reader.py:95)
-        .select(F.col("event.extractedFields").alias("fields"))
+    event = T.StructType([T.StructField("extractedFields", fields)])
+    return T.StructType(
+        [
+            T.StructField("messageType", T.StringType()),
+            T.StructField("logEvents", T.ArrayType(event)),
+            T.StructField(CORRUPT_RECORD, T.StringType()),
+        ]
     )
 
 
-def typed_flow_logs(events: DataFrame, fields: list[tuple[str, str]] | None = None) -> DataFrame:
-    """Pivot the dynamic ``fields`` map into typed columns.
+ENVELOPE_SCHEMA = envelope_schema(typed=False)
+
+
+def typed_flow_logs(events: DataFrame) -> DataFrame:
+    """Cast the ``fields`` column (struct or map) into typed columns.
 
     The reference leaves values untyped (str/int mix,
     tests/test_kinesis_logs_reader.py:48-55); the engine adds real
     typing via explicit casts so downstream relational operators get
     pushdown-able, codegen-friendly columns.
     """
-    fields = fields or FLOW_LOG_FIELDS
     cols: list[Column] = [
-        F.col("fields").getItem(name).cast(dtype).alias(name) for name, dtype in fields
+        F.col("fields").getItem(name).cast(dtype).alias(name) for name, dtype in FLOW_LOG_FIELDS
     ]
     return events.select(*cols)
 
 
-def flow_log_rows(
-    events: DataFrame, typed: bool, fields: list[tuple[str, str]] | None = None
+def flow_log_rows(envelopes: DataFrame, typed: bool, mode: str = "strict") -> DataFrame:
+    """The tail every route shares, from the parsed envelope columns
+    (``envelope_schema``) plus, in strict mode, ``origin``: the record's
+    source as its error names it.
+
+    ``mode``:
+    - ``strict`` (reference semantics — its package has no try/except):
+      an envelope that is not valid JSON (or not UTF-8) raises, as the
+      reference's ``json.loads`` does;
+    - ``permissive``: its columns parse as null, so it has no events.
+
+    Returns typed columns, or the ``fields`` map the reference-compatible
+    facade iterates.
+    """
+    keep = F.col("messageType") == "DATA_MESSAGE"
+    if mode != "permissive":
+        # One CASE, so the check runs before the DATA_MESSAGE test (a
+        # corrupt record has a null messageType).
+        error = F.concat(F.lit("malformed CWL envelope in "), F.col("origin"))
+        keep = F.when(F.col(CORRUPT_RECORD).isNotNull(), F.raise_error(error)).otherwise(keep)
+    events = (
+        # R7 + R8: a dropped record (kinesis_logs_reader.py:91-92) flattens
+        # to no events (:94). A predicate inside the generator, not a
+        # Filter: Catalyst would push a Filter below a binary route's
+        # parse and run the gunzip UDF twice.
+        envelopes.select(F.explode(F.when(keep, F.col("logEvents"))).alias("event"))
+        # R9: project the logical row (kinesis_logs_reader.py:95)
+        .select(F.col("event.extractedFields").alias("fields"))
+    )
+    return typed_flow_logs(events) if typed else events
+
+
+def decode_envelope(
+    raw: DataFrame, data_col: str = "data", mode: str = "strict", typed: bool = False
 ) -> DataFrame:
-    """The tail every ingest route shares: typed columns, or the untyped
-    ``fields`` map the reference-compatible facade iterates."""
-    return typed_flow_logs(events, fields) if typed else events
+    """gzipped-JSON blob column -> one row per log event.
+
+    The binary-column parse: ``gunzip_text`` (``gunzip_text_safe`` in
+    permissive mode, where a corrupt gzip becomes a null envelope), then
+    ``from_json``, then ``flow_log_rows``.
+    """
+    gunzip = gunzip_text_safe if mode == "permissive" else gunzip_text
+    envelope = F.from_json(gunzip(F.col(data_col)), envelope_schema(typed))
+    envelopes = raw.select(envelope.alias("envelope")).select(
+        "envelope.*", F.lit(f"a '{data_col}' record").alias("origin")
+    )
+    return flow_log_rows(envelopes, typed, mode)
 
 
 # One gzipped envelope blob per ``*.gz`` file, shard subdirectories included.
 _BLOB_FILE_OPTIONS = {"pathGlobFilter": "*.gz", "recursiveFileLookup": "true"}
 
 
+def _read_blob_files(reader, path: str, typed: bool, mode: str) -> DataFrame:
+    """The file parse (``reader``: ``spark.read`` or ``spark.readStream``).
+    Permissive mode skips a file the gzip codec cannot read; only strict
+    mode reads ``_metadata`` (unused, it would still be scanned whole)."""
+    reader = reader.schema(envelope_schema(typed)).options(multiLine="true", **_BLOB_FILE_OPTIONS)
+    if mode == "permissive":
+        envelopes = reader.option("ignoreCorruptFiles", "true").json(path)
+    else:
+        envelopes = reader.json(path).withColumn("origin", F.col("_metadata.file_path"))
+    return flow_log_rows(envelopes, typed, mode)
+
+
 def read_cwl_batch(
-    spark: SparkSession,
-    path: str,
-    typed: bool = True,
-    fields: list[tuple[str, str]] | None = None,
-    mode: str = "strict",
-    start_time=None,
+    spark: SparkSession, path: str, typed: bool = True, mode: str = "strict", start_time=None
 ) -> DataFrame:
     """Batch-replay a directory of ``*.gz`` envelope blobs (t1 fixtures).
 
     ``start_time`` (datetime) maps the reference's AT_TIMESTAMP iterator
     (kinesis_logs_reader.py:68-77) onto file replay: only blobs whose
-    mtime is after it are read (binaryFile ``modifiedAfter`` — pruned at
+    mtime is after it are read (``modifiedAfter`` — pruned at
     file-listing time, the batch analog of a positioned shard open).
     """
-    reader = spark.read.format("binaryFile").options(**_BLOB_FILE_OPTIONS)
+    reader = spark.read
     if start_time is not None:
-        reader = reader.option(
-            "modifiedAfter", start_time.strftime("%Y-%m-%dT%H:%M:%S")
-        )
-    raw = reader.load(path).select(F.col("content").alias("data"))
-    return flow_log_rows(decode_envelope(raw, mode=mode), typed, fields)
+        reader = reader.option("modifiedAfter", start_time.strftime("%Y-%m-%dT%H:%M:%S"))
+    return _read_blob_files(reader, path, typed, mode)
 
 
 def read_cwl_stream(
@@ -174,7 +185,6 @@ def read_cwl_stream(
     *,
     kinesis_options: dict[str, str] | None = None,
     typed: bool = True,
-    fields: list[tuple[str, str]] | None = None,
     max_files_per_trigger: int | None = None,
     mode: str = "strict",
 ) -> DataFrame:
@@ -193,25 +203,10 @@ def read_cwl_stream(
         reader = spark.readStream.format("kinesis")
         for k, v in kinesis_options.items():
             reader = reader.option(k, v)
-        raw = reader.load().select(F.col("data"))
-    elif path is not None:
-        # Streaming sources require an explicit schema; binaryFile's is fixed.
-        binary_file_schema = T.StructType(
-            [
-                T.StructField("path", T.StringType()),
-                T.StructField("modificationTime", T.TimestampType()),
-                T.StructField("length", T.LongType()),
-                T.StructField("content", T.BinaryType()),
-            ]
-        )
-        reader = (
-            spark.readStream.format("binaryFile")
-            .schema(binary_file_schema)
-            .options(**_BLOB_FILE_OPTIONS)
-        )
-        if max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-        raw = reader.load(path).select(F.col("content").alias("data"))
-    else:
+        return decode_envelope(reader.load(), mode=mode, typed=typed)
+    if path is None:
         raise ValueError("need path= (file replay) or kinesis_options=")
-    return flow_log_rows(decode_envelope(raw, mode=mode), typed, fields)
+    reader = spark.readStream
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    return _read_blob_files(reader, path, typed, mode)

@@ -9,16 +9,23 @@ from __future__ import annotations
 
 import gzip
 import io
+import json
 import zlib
 
+import pytest
 from pyspark.sql import functions as F
 
 from kinesis_logs_reader_spark.cli import print_stream
 from kinesis_logs_reader_spark.functions.gzip_udfs import gunzip_text
 from kinesis_logs_reader_spark.reader import KinesisLogsReader
-from kinesis_logs_reader_spark.sources.envelope import read_cwl_batch
+from kinesis_logs_reader_spark.sources.envelope import (
+    FLOW_LOG_FIELDS,
+    decode_envelope,
+    read_cwl_batch,
+    read_cwl_stream,
+)
 
-from tests.conftest import data_message, gz_blob, make_event
+from tests.conftest import control_message, data_message, gz_blob, make_event
 
 
 def test_gunzip_roundtrip(spark):
@@ -124,10 +131,10 @@ def _deflate_corrupt_blob() -> bytes:
 
 def test_permissive_mode_drops_corrupt_records(spark, tmp_path):
     """PERMISSIVE ingest: corrupt gzip (bad header, or a corrupt deflate
-    body raising zlib.error) and malformed JSON vanish; valid records
-    survive. Strict mode (reference semantics) fails."""
-    import pytest
-
+    body) and malformed JSON vanish; valid records survive. Strict mode
+    (reference semantics) fails: the path route's JVM gzip codec names
+    the file it could not read, the client route's Python gunzip raises
+    ``zlib.error``."""
     src = tmp_path / "dirty"
     src.mkdir()
     (src / "good.gz").write_bytes(gz_blob(data_message([make_event(1)])))
@@ -147,14 +154,164 @@ def test_permissive_mode_drops_corrupt_records(spark, tmp_path):
     flipped = tmp_path / "bitflip"
     flipped.mkdir()
     (flipped / "bitflip.gz").write_bytes(bitflip)
-    with pytest.raises(Exception, match="zlib.error"):
+    with pytest.raises(Exception, match="bitflip.gz"):
         read_cwl_batch(spark, str(flipped), typed=False, mode="strict").collect()
+
+    reader = KinesisLogsReader("s", kinesis_client=_blob_client([bitflip]), spark=spark)
+    with pytest.raises(Exception, match="zlib.error"):
+        list(reader)
+
+
+# The reference's per-record loop (kinesis_logs_reader.py:87-95) on one blob.
+def _reference_rows(blob: bytes) -> list[dict]:
+    env = json.loads(gzip.decompress(blob).decode("utf-8"))
+    if env["messageType"] != "DATA_MESSAGE":
+        return []
+    return [event["extractedFields"] for event in env["logEvents"]]
+
+
+def _bad_inputs() -> dict[str, bytes]:
+    env = data_message([make_event(7)])
+    text = json.dumps(env).encode()
+    good = gz_blob(env)
+
+    def gz(b: bytes) -> bytes:
+        return gzip.compress(b, mtime=0)
+
+    def one_event(fields: bytes) -> bytes:
+        return gz(b'{"messageType": "DATA_MESSAGE", "logEvents": [{"extractedFields": '
+                  + fields + b"}]}")
+
+    return {
+        "bad_gzip_header": b"\x1f\x8b\x08\x00BROKEN",
+        "corrupt_deflate": _deflate_corrupt_blob(),
+        "truncated_gzip": good[: len(good) // 2],
+        "multi_member_gzip": gz(text[:25]) + gz(text[25:]),
+        "pretty_printed": gz(json.dumps(env, indent=2).encode()),
+        "duplicate_key": one_event(b'{"srcport": "1", "srcport": "2"}'),
+        "integer_values": one_event(b'{"srcport": 1024, "bytes": 99, "srcaddr": "192.0.2.9"}'),
+        "empty_file": b"",
+        "empty_gzip": gz(b""),
+        "missing_logEvents": gz_blob({"messageType": "DATA_MESSAGE"}),
+        "control_message": gz_blob(control_message()),
+        "non_utf8": one_event(b'{"srcaddr": "\xff\xfe"}'),
+        "malformed_json": gz(b"this is not json"),
+    }
+
+
+_BAD_INPUTS = _bad_inputs()
+
+# The reference raises on these (json.loads("") / KeyError); the engine
+# reads them as records with no events, in both modes.
+_NO_EVENTS = {"empty_file", "empty_gzip", "missing_logEvents"}
+
+
+def _reference_raises(blob: bytes) -> bool:
+    try:
+        _reference_rows(blob)
+    except Exception:
+        return True
+    return False
+
+
+def _normalise(rows: list[dict], typed: bool) -> list:
+    """Reference rows as the engine types them: cast to the flow-log
+    schema, or (untyped) every value as its text, as the TSV prints it."""
+    if typed:
+        cast = {"int": int, "bigint": int, "string": str}
+        out = [tuple(None if r.get(k) is None else cast[t](r[k]) for k, t in FLOW_LOG_FIELDS)
+               for r in rows]
+    else:
+        out = [sorted((k, str(v)) for k, v in r.items()) for r in rows]
+    return sorted(out, key=str)
+
+
+def _route_rows(spark, tmp_path, route: str, mode: str, typed: bool, blobs) -> list:
+    """Rows of one ingest route over ``blobs`` (already written under
+    ``tmp_path/src`` for the path routes), in ``_normalise``'s shape."""
+    src = str(tmp_path / "src")
+    if route == "path_batch":
+        got = read_cwl_batch(spark, src, typed=typed, mode=mode).collect()
+    elif route == "path_stream":
+        got = []
+        q = (
+            read_cwl_stream(spark, path=src, typed=typed, mode=mode)
+            .writeStream.foreachBatch(lambda df, _: got.extend(df.collect()))
+            .option("checkpointLocation", str(tmp_path / f"ckpt-{typed}"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+    elif mode == "strict":
+        reader = KinesisLogsReader("s", kinesis_client=_blob_client(blobs), spark=spark,
+                                   typed=typed)
+        got = reader.to_df().collect()
+    else:
+        # The reader has no mode; its frame is this one, decoded permissively.
+        raw = spark.createDataFrame([(b,) for b in blobs], "data binary")
+        got = decode_envelope(raw, mode=mode, typed=typed).collect()
+    if typed:
+        return sorted((tuple(r) for r in got), key=str)
+    return sorted((sorted(r["fields"].items()) for r in got), key=str)
+
+
+@pytest.mark.parametrize("mode", ["strict", "permissive"])
+@pytest.mark.parametrize("route", ["path_batch", "path_stream", "client"])
+@pytest.mark.parametrize("case", sorted(_BAD_INPUTS))
+def test_bad_input_parity(spark, tmp_path, case, route, mode):
+    """Each bad input, next to a good blob, against the reference's loop.
+    Strict mode: the rows are equal, or both sides raise (on a path route
+    the error names the file). Permissive mode drops exactly the blobs
+    the reference raises on."""
+    good = gz_blob(data_message([make_event(5), make_event(6)]))
+    blobs = [good, _BAD_INPUTS[case]]
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "good.gz").write_bytes(good)
+    (src / f"{case}.gz").write_bytes(_BAD_INPUTS[case])
+
+    raises = _reference_raises(blobs[1])
+    for typed in (True, False):
+        if mode == "strict" and raises and case not in _NO_EVENTS:
+            match = f"{case}.gz" if route.startswith("path") else None
+            with pytest.raises(Exception, match=match):
+                _route_rows(spark, tmp_path, route, mode, typed, blobs)
+            continue
+        kept = [b for b in blobs if not _reference_raises(b)]
+        want = _normalise([r for b in kept for r in _reference_rows(b)], typed)
+        assert _route_rows(spark, tmp_path, route, mode, typed, blobs) == want
+
+
+def test_untyped_view_keeps_keys_outside_the_flow_log_schema(spark, tmp_path):
+    """typed=False keeps ``extractedFields`` as a map on the path and the
+    client route, so a key the flow-log schema lacks survives."""
+    fields = {"srcaddr": "192.0.2.1", "custom_key": "kept"}
+    blob = gz_blob(data_message([{"extractedFields": fields}]))
+    (tmp_path / "one.gz").write_bytes(blob)
+
+    rows = read_cwl_batch(spark, str(tmp_path), typed=False).collect()
+    assert [dict(r["fields"]) for r in rows] == [fields]
+    reader = KinesisLogsReader("s", kinesis_client=_blob_client([blob]), spark=spark)
+    assert list(reader) == [fields]
+
+
+def test_path_replay_runs_no_python_worker(spark, envelope_dir):
+    """The file routes decode in the JVM: no Python-UDF node in the
+    executed plan of read_cwl_batch, typed or not. The client route,
+    which still gunzips in Python, is the positive control."""
+    def plan(df) -> str:
+        df.collect()
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    for typed in (True, False):
+        text = plan(read_cwl_batch(spark, envelope_dir, typed=typed))
+        assert "ArrowEvalPython" not in text and "BatchEvalPython" not in text
+    reader = KinesisLogsReader("s", kinesis_client=_mock_kinesis_client(), spark=spark)
+    assert "ArrowEvalPython" in plan(reader.to_df())
 
 
 def test_streaming_ingest_available_now(spark, envelope_dir, tmp_path):
     """A2 via readStream + availableNow == bounded catch-up semantics."""
-    from kinesis_logs_reader_spark.sources.envelope import read_cwl_stream
-
     stream = read_cwl_stream(spark, path=envelope_dir, typed=True)
     assert stream.isStreaming
     q = (
@@ -174,8 +331,6 @@ def test_stream_replay_one_file_per_trigger(spark, envelope_dir, tmp_path):
     """max_files_per_trigger=1 under availableNow: one micro-batch per
     blob file (the control message and the empty page included), and the
     union of the batches is exactly the batch replay's rows."""
-    from kinesis_logs_reader_spark.sources.envelope import read_cwl_stream
-
     batches: dict[int, list[tuple]] = {}
 
     def collect(df, batch_id):
@@ -204,8 +359,6 @@ def _mock_kinesis_client():
     (tests/test_kinesis_logs_reader.py:62-101): 2 shards, a control
     message, one shard needing two get_records pages."""
     from unittest.mock import MagicMock
-
-    from tests.conftest import control_message
 
     describe = {
         "StreamDescription": {
@@ -243,6 +396,23 @@ def _mock_kinesis_client():
         "ShardIterator": f"{kw['ShardId']}_it-1"
     }
     client.get_records.side_effect = lambda **kw: get_records[kw["ShardIterator"]]
+    return client
+
+
+def _blob_client(blobs: list[bytes]):
+    """boto3-client mock: one shard serving ``blobs`` in one page."""
+    from unittest.mock import MagicMock
+
+    client = MagicMock()
+    client.get_paginator.return_value.paginate.return_value = [
+        {"StreamDescription": {"Shards": [{"ShardId": "shard-0001"}]}}
+    ]
+    client.get_shard_iterator.return_value = {"ShardIterator": "it-1"}
+    client.get_records.return_value = {
+        "Records": [{"Data": b} for b in blobs],
+        "NextShardIterator": "it-2",
+        "MillisBehindLatest": 0,
+    }
     return client
 
 
