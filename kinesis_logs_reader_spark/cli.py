@@ -17,35 +17,46 @@ from __future__ import annotations
 import argparse
 import sys
 from datetime import datetime
-from itertools import islice
+from itertools import chain, islice
 
 from kinesis_logs_reader_spark.reader import KinesisLogsReader
 from kinesis_logs_reader_spark.session import build_session
 
 
+# TSV lines per write: one write per chunk, not one print per row.
+_CHUNK_ROWS = 4096
+
+
 def print_stream(reader: KinesisLogsReader, stop_after: int = 0, outfile=None) -> int:
-    """TSV printer mirroring reference __main__.py:10-23."""
+    """TSV printer mirroring reference __main__.py:10-23.
+
+    Each row is formatted once, as ``str`` of each value joined by tabs
+    (the bytes ``print(*values, sep="\\t")`` writes, ``None`` included),
+    and the lines are written in chunks of ``_CHUNK_ROWS``.
+    """
     outfile = outfile or sys.stdout
     df = reader.to_df()
+    rows = df.toLocalIterator()
+    if stop_after:  # R13: __main__.py:20-23
+        rows = islice(rows, stop_after)
     if reader._typed:
         header = sorted(df.columns)  # R12: __main__.py:15
-        rows = (r.asDict() for r in df.toLocalIterator())
+        order = [df.columns.index(k) for k in header]
+        # Index plain tuples: Row.__getitem__ is a Python-level call.
+        lines = ("\t".join([str(v[i]) for i in order]) for v in map(tuple, rows))
     else:
-        it = (dict(r["fields"]) for r in df.toLocalIterator())
+        items = (dict(r["fields"]) for r in rows)
         try:
-            first = next(it)
+            first = next(items)
         except StopIteration:
             return 0
-        header = sorted(first.keys())
-        from itertools import chain
-
-        rows = chain([first], it)
-    print(*header, sep="\t", file=outfile)
+        header = sorted(first)
+        lines = ("\t".join([str(item.get(k)) for k in header]) for item in chain([first], items))
+    outfile.write("\t".join(header) + "\n")
     n = 0
-    limit = islice(rows, stop_after) if stop_after else rows
-    for item in limit:  # R13/R14: __main__.py:20-23
-        print(*(item.get(k) for k in header), sep="\t", file=outfile)
-        n += 1
+    while chunk := list(islice(lines, _CHUNK_ROWS)):  # R14: __main__.py:20-23
+        outfile.write("\n".join(chunk) + "\n")
+        n += len(chunk)
     return n
 
 

@@ -9,7 +9,7 @@ tests/test_kinesis_logs_reader.py:96-107) ``kinesis_client`` — while
 execution happens in Spark: the heavy work (gunzip, JSON parse, control
 filter, flatten, project) is the declarative envelope chain from
 :mod:`kinesis_logs_reader_spark.sources.envelope`, and iteration uses
-``toLocalIterator`` so the driver never materializes the full stream.
+``toLocalIterator``, so the driver holds one partition of rows at a time.
 
 Sources, in precedence order:
 
@@ -19,7 +19,12 @@ Sources, in precedence order:
   per shard — each call needs the previous ``NextShardIterator`` — so it
   runs driver-side exactly as the reference does
   (kinesis_logs_reader.py:61-104), but ONLY as the I/O tap: raw gzipped
-  blobs go straight into a DataFrame and all decoding is distributed.
+  blobs go straight into an Arrow-built DataFrame and all decoding is
+  distributed. Those blobs are already on the driver, so the decode runs
+  once, in one parallel job, into Spark's cache on first use (the first
+  ``to_df()`` or ``next()``, so a strict-mode error surfaces there, not
+  at construction); iteration then streams the cached partitions. The
+  cache lives as long as the reader.
 - ``path=``: hermetic batch replay of a directory of gzipped envelope
   blobs; ``start_time`` maps to ``modifiedAfter`` (the AT_TIMESTAMP
   analog for replay).
@@ -35,9 +40,12 @@ Sources, in precedence order:
 
 from __future__ import annotations
 
+import time
+import weakref
 from datetime import datetime
 from typing import Iterator
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from kinesis_logs_reader_spark.sources.envelope import (
@@ -53,6 +61,29 @@ from kinesis_logs_reader_spark.sources.envelope import (
 # (``kinesis_options=``) or a path replay — fail loud, don't swap.
 MAX_DRAIN_RECORDS = 1_000_000
 MAX_DRAIN_BYTES = 1 << 30  # 1 GiB of raw gzipped payload
+
+# A throttled get_records (ProvisionedThroughputExceededException) is
+# retried after THROTTLE_BASE_DELAY_S * 2**attempt seconds, at most
+# THROTTLE_RETRIES times; past that the drain raises the last error.
+THROTTLE_RETRIES = 5
+THROTTLE_BASE_DELAY_S = 0.2
+
+
+def _get_records(kinesis_client, shard_iterator: str) -> dict:
+    """``get_records`` with bounded exponential backoff on throttling. The
+    error code is read where botocore's ``ClientError`` carries it
+    (``e.response["Error"]["Code"]``), duck-typed, so botocore is not
+    imported."""
+    for attempt in range(THROTTLE_RETRIES):
+        try:
+            return kinesis_client.get_records(ShardIterator=shard_iterator)
+        except Exception as e:
+            response = getattr(e, "response", None)
+            code = response.get("Error", {}).get("Code") if isinstance(response, dict) else None
+            if code != "ProvisionedThroughputExceededException":
+                raise
+        time.sleep(THROTTLE_BASE_DELAY_S * 2**attempt)
+    return kinesis_client.get_records(ShardIterator=shard_iterator)
 
 
 def drain_kinesis_client(
@@ -77,7 +108,8 @@ def drain_kinesis_client(
     backlog) raises RuntimeError at the record/byte caps instead of
     accumulating driver memory forever, and a closed shard whose
     ``NextShardIterator`` is null is marked finished instead of
-    KeyError-ing.
+    KeyError-ing. A throttled ``get_records`` is retried with bounded
+    exponential backoff (``THROTTLE_RETRIES``, ``THROTTLE_BASE_DELAY_S``).
     """
     paginator = kinesis_client.get_paginator("describe_stream")
     shard_ids = [
@@ -105,7 +137,7 @@ def drain_kinesis_client(
         for shard_id in shard_ids:
             if finished[shard_id]:
                 continue
-            response = kinesis_client.get_records(ShardIterator=iterators[shard_id])
+            response = _get_records(kinesis_client, iterators[shard_id])
             next_it = response.get("NextShardIterator")
             if next_it is None:  # closed shard: fully consumed
                 finished[shard_id] = True
@@ -169,6 +201,12 @@ def connector_options(
     return options
 
 
+def _release(df: DataFrame) -> None:
+    """Drop a reader's cached decode; a no-op once its session is stopped."""
+    if df.sparkSession.sparkContext._jsc is not None:
+        df.unpersist()
+
+
 class KinesisLogsReader:
     """Iterator of flat log-event dicts, reference-compatible surface."""
 
@@ -189,6 +227,8 @@ class KinesisLogsReader:
         self.kinesis_client = kinesis_client
         self._typed = typed
         self._iterator: Iterator[dict] | None = None
+        # Set on the client route: its decode runs into the cache on first use.
+        self._decode_pending = False
 
         if kinesis_client is None and path is None and kinesis_options is None:
             # Reference default: build a client from session kwargs
@@ -215,10 +255,9 @@ class KinesisLogsReader:
 
         if kinesis_client is not None:
             blobs = drain_kinesis_client(kinesis_client, stream_name or "", start_time)
-            raw = self.spark.createDataFrame(
-                [(b,) for b in blobs], "data binary"
-            )
+            raw = self.spark.createDataFrame(pa.table({"data": pa.array(blobs, pa.binary())}))
             self.df: DataFrame = decode_envelope(raw, typed=typed)
+            self._decode_pending = True
         elif path is not None:
             # start_time -> modifiedAfter: the AT_TIMESTAMP analog for replay
             self.df = read_cwl_batch(
@@ -238,17 +277,29 @@ class KinesisLogsReader:
         STREAMING (``df.isStreaming``) only on the explicit
         ``kinesis_options=`` connector route — the mode follows the
         construction route, never silently from what's importable.
+
+        On the client route the first call decodes every drained blob in
+        one parallel job into Spark's cache (strict-mode errors raise
+        here), and the frame returned reads that cache; it is released
+        when the reader is garbage-collected. The path and connector
+        routes stay lazy: their input is not on the driver.
         """
+        if self._decode_pending:
+            self._decode_pending = False
+            self.df.persist()
+            weakref.finalize(self, _release, self.df).atexit = False
+            self.df.count()
         return self.df
 
     def _rows(self) -> Iterator[dict]:
-        if self.df.isStreaming:
+        df = self.to_df()
+        if df.isStreaming:
             raise TypeError("streaming reader: use to_df() + writeStream")
         if self._typed:
-            for row in self.df.toLocalIterator():
+            for row in df.toLocalIterator():
                 yield row.asDict()
         else:
-            for row in self.df.toLocalIterator():
+            for row in df.toLocalIterator():
                 yield dict(row["fields"])
 
     # Reference iterator protocol (kinesis_logs_reader.py:46-55): the

@@ -196,6 +196,7 @@ def _bad_inputs() -> dict[str, bytes]:
         "control_message": gz_blob(control_message()),
         "non_utf8": one_event(b'{"srcaddr": "\xff\xfe"}'),
         "malformed_json": gz(b"this is not json"),
+        "missing_extractedFields": gz_blob(data_message([make_event(8), {"id": "9"}])),
     }
 
 
@@ -456,6 +457,164 @@ def test_reader_next_protocol(spark):
     rest = list(chain([first], reader))
     assert len(rest) == 5
     assert reader.next.__call__  # py2-compat alias present
+
+
+def _paged_client(shards: dict[str, list[list[bytes]]]):
+    """boto3-client mock: each shard serves its pages of blobs in turn and
+    reports caught-up on its last page."""
+    from unittest.mock import MagicMock
+
+    pages = {}
+    for shard_id, shard_pages in shards.items():
+        for i, blobs in enumerate(shard_pages):
+            pages[f"{shard_id}_it-{i}"] = {
+                "Records": [{"Data": b} for b in blobs],
+                "NextShardIterator": f"{shard_id}_it-{i + 1}",
+                "MillisBehindLatest": 0 if i == len(shard_pages) - 1 else 100,
+            }
+    client = MagicMock()
+    client.get_paginator.return_value.paginate.return_value = [
+        {"StreamDescription": {"Shards": [{"ShardId": s} for s in shards]}}
+    ]
+    client.get_shard_iterator.side_effect = lambda **kw: {"ShardIterator": f"{kw['ShardId']}_it-0"}
+    client.get_records.side_effect = lambda **kw: pages[kw["ShardIterator"]]
+    return client
+
+
+def _reference_tsv(rows: list[dict]) -> str:
+    """The reference CLI's loop (__main__.py:10-23) over ``rows``: header
+    peeked from the first row, then one ``print`` per row."""
+    out = io.StringIO()
+    header = sorted(rows[0].keys())
+    print(*header, sep="\t", file=out)
+    for item in rows:
+        print(*(item.get(k) for k in header), sep="\t", file=out)
+    return out.getvalue()
+
+
+@pytest.mark.parametrize("typed", [False, True])
+def test_client_tsv_golden_in_drain_order(spark, monkeypatch, typed):
+    """The client route's TSV is byte-identical to the reference CLI's
+    loop over the reference rows, in drain order, across a multi-partition
+    frame and several write chunks; a row lacking a field prints
+    ``None``. ``stop_after=N`` prints exactly the first N rows of it."""
+    import kinesis_logs_reader_spark.cli as cli
+    from kinesis_logs_reader_spark.reader import drain_kinesis_client
+
+    monkeypatch.setattr(cli, "_CHUNK_ROWS", 3)
+    partial = make_event(30)
+    del partial["extractedFields"]["dstport"]
+
+    def blob(*ids: int) -> bytes:
+        return gz_blob(data_message([make_event(i) for i in ids]))
+
+    shards = {
+        "shard-0001": [[blob(0, 1, 2), gz_blob(control_message())], [blob(10, 11)]],
+        "shard-0002": [[blob(3)], [gz_blob(data_message([make_event(12), partial]))]],
+        "shard-0003": [[blob(4, 5), blob(6, 7, 8, 9)], [], [blob(13, 14, 15)]],
+    }
+    drained = drain_kinesis_client(_paged_client(shards), "s")
+    want = [r for b in drained for r in _reference_rows(b)]
+    if typed:
+        cast = {"int": int, "bigint": int, "string": str}
+        want = [{k: None if r.get(k) is None else cast[t](r[k]) for k, t in FLOW_LOG_FIELDS}
+                for r in want]
+
+    reader = KinesisLogsReader("s", kinesis_client=_paged_client(shards), spark=spark, typed=typed)
+    assert reader.to_df().rdd.getNumPartitions() > 1
+    out = io.StringIO()
+    assert print_stream(reader, outfile=out) == len(want) == 17
+    full = out.getvalue()
+    assert full == _reference_tsv(want)
+    assert "None" in full
+
+    reader = KinesisLogsReader("s", kinesis_client=_paged_client(shards), spark=spark, typed=typed)
+    out = io.StringIO()
+    assert print_stream(reader, stop_after=7, outfile=out) == 7
+    assert out.getvalue().splitlines() == full.splitlines()[:8]  # header + 7 rows
+
+
+def test_client_route_decodes_once_into_a_cache_released_with_the_reader(spark, envelope_dir):
+    """The client route's decode is cached on first use, not at
+    construction; reads after that come from the cache, and the cache is
+    released when the reader is garbage-collected. A path-route reader
+    persists nothing."""
+    import gc
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    gc.collect()
+    before = persisted().size()
+
+    reader = KinesisLogsReader("s", kinesis_client=_mock_kinesis_client(), spark=spark, typed=True)
+    df = reader.df
+    assert cache.lookupCachedData(df._jdf).isEmpty()
+    assert print_stream(reader, outfile=io.StringIO()) == 5
+    assert reader.to_df() is df
+    entry = cache.lookupCachedData(df._jdf)
+    assert entry.isDefined()
+    assert entry.get().cachedRepresentation().cacheBuilder().isCachedColumnBuffersLoaded()
+    assert persisted().size() == before + 1
+    assert "InMemoryTableScan" in df._jdf.queryExecution().executedPlan().toString()
+    assert sorted(r.srcport for r in df.collect()) == [1024, 1025, 1026, 1027, 1028]
+
+    del reader
+    gc.collect()
+    assert cache.lookupCachedData(df._jdf).isEmpty()
+    assert persisted().size() == before
+
+    path_reader = KinesisLogsReader(spark=spark, path=envelope_dir, typed=False)
+    assert print_stream(path_reader, outfile=io.StringIO()) == 5
+    assert len(list(KinesisLogsReader(spark=spark, path=envelope_dir))) == 5
+    assert cache.lookupCachedData(path_reader.to_df()._jdf).isEmpty()
+    assert persisted().size() == before
+
+
+class _Throttled(Exception):
+    """Shaped like botocore's ``ClientError``: the code sits in
+    ``response["Error"]["Code"]``."""
+
+    def __init__(self) -> None:
+        super().__init__("Rate exceeded for shard")
+        self.response = {"Error": {"Code": "ProvisionedThroughputExceededException"}}
+
+
+def test_drain_retries_throttled_get_records(spark, monkeypatch):
+    """A throttled get_records is retried with exponential backoff: two
+    throttles then a page give every row; a throttle that persists
+    raises after THROTTLE_RETRIES retries; any other error is not
+    retried."""
+    from types import SimpleNamespace
+
+    import kinesis_logs_reader_spark.reader as reader_mod
+
+    sleeps: list[float] = []
+    monkeypatch.setattr(reader_mod, "time", SimpleNamespace(sleep=sleeps.append))
+    base = reader_mod.THROTTLE_BASE_DELAY_S
+    page = {
+        "Records": [{"Data": gz_blob(data_message([make_event(0), make_event(1)]))}],
+        "NextShardIterator": "it-2",
+        "MillisBehindLatest": 0,
+    }
+    client = _blob_client([])
+    client.get_records.side_effect = [_Throttled(), _Throttled(), page]
+    reader = KinesisLogsReader("s", kinesis_client=client, spark=spark)
+    assert list(reader) == [make_event(0)["extractedFields"], make_event(1)["extractedFields"]]
+    assert sleeps == [base, 2 * base]
+
+    sleeps.clear()
+    client = _blob_client([])
+    client.get_records.side_effect = _Throttled()
+    with pytest.raises(_Throttled):
+        reader_mod.drain_kinesis_client(client, "s")
+    assert client.get_records.call_count == reader_mod.THROTTLE_RETRIES + 1
+    assert sleeps == [base * 2**i for i in range(reader_mod.THROTTLE_RETRIES)]
+
+    sleeps.clear()
+    client.get_records.side_effect = ValueError("expired iterator")
+    with pytest.raises(ValueError):
+        reader_mod.drain_kinesis_client(client, "s")
+    assert sleeps == []
 
 
 def test_drain_skips_closed_shards():
