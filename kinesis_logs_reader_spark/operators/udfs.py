@@ -4,8 +4,8 @@ The engine's rule: UDFs are the slow path — everything expressible in
 Catalyst stays there (see operators/relational.py). This module is the
 escape hatch, demonstrating each sanctioned form at its least-bad:
 
-- scalar pandas UDF (Arrow-batched): gzip kernels
-  (functions/gzip_udfs.py) and SimHash (operators/dedup.py);
+- scalar pandas UDF (Arrow-batched): SimHash (operators/dedup.py);
+  the gzip kernels (functions/gzip_udfs.py) are Java UDFs instead;
 - grouped-agg pandas UDF: true median (not expressible exactly in
   Spark SQL without collecting percentiles);
 - applyInPandas (grouped map): per-group normalization where the whole

@@ -19,9 +19,11 @@ Sources, in precedence order:
   per shard — each call needs the previous ``NextShardIterator`` — so it
   runs driver-side exactly as the reference does
   (kinesis_logs_reader.py:61-104), but ONLY as the I/O tap: raw gzipped
-  blobs go straight into an Arrow-built DataFrame and all decoding is
-  distributed. Those blobs are already on the driver, so the decode runs
-  once, in one parallel job, into Spark's cache on first use (the first
+  blobs go straight into an Arrow-built DataFrame (``blob_frame``: one
+  contiguous, byte-balanced slice of the drain per partition) and all
+  decoding is distributed, in the JVM. Those blobs are already on the
+  driver, so the decode runs once, in one parallel job, into Spark's
+  cache on first use (the first
   ``to_df()`` or ``next()``, so a strict-mode error surfaces there, not
   at construction); iteration then streams the cached partitions. The
   cache lives as long as the reader.
@@ -40,6 +42,7 @@ Sources, in precedence order:
 
 from __future__ import annotations
 
+import threading
 import time
 import weakref
 from datetime import datetime
@@ -47,6 +50,7 @@ from typing import Iterator
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from kinesis_logs_reader_spark.sources.envelope import (
     decode_envelope,
@@ -158,6 +162,28 @@ def drain_kinesis_client(
     return blobs
 
 
+def blob_frame(spark: SparkSession, blobs: list[bytes]) -> DataFrame:
+    """The drained blobs as a ``data: binary`` frame, in drain order.
+
+    The drain is cut into ``defaultParallelism`` contiguous slices at
+    equal shares of gzip bytes (a blob goes to the slice its middle byte
+    falls in), so no slice holds more than ``total/k`` bytes plus its
+    largest blob. Each slice is one Arrow row (``list<binary>``), and
+    one row of a local table is one partition, so the decode keeps every
+    core busy for about the same time; ``explode`` restores one row per
+    blob (and drops an empty slice, left by a blob larger than
+    ``total/k``)."""
+    k = spark.sparkContext.defaultParallelism
+    total = sum(map(len, blobs))
+    slices: list[list[bytes]] = [[] for _ in range(k)]
+    start = 0
+    for blob in blobs:
+        slices[min(k - 1, (2 * start + len(blob)) * k // (2 * total or 1))].append(blob)
+        start += len(blob)
+    table = pa.table({"data": pa.array(slices, pa.list_(pa.binary()))})
+    return spark.createDataFrame(table).select(F.explode("data").alias("data"))
+
+
 # boto3.session.Session's own keyword surface; **kwargs outside this
 # set cannot be session parameters, so routing them to boto3 would
 # TypeError deep inside the SDK instead of at our API boundary.
@@ -202,9 +228,18 @@ def connector_options(
 
 
 def _release(df: DataFrame) -> None:
-    """Drop a reader's cached decode; a no-op once its session is stopped."""
+    """Drop a reader's cached decode; a no-op once its session is stopped.
+
+    A finalizer runs wherever the garbage collector runs, which includes
+    the middle of a py4j call of the same thread (py4j reads its answer
+    through Python-level socket code). A py4j call of its own there
+    would re-enter that thread's connection and break the call in
+    flight, so the unpersist runs on a new thread, with its own
+    connection, and is waited for."""
     if df.sparkSession.sparkContext._jsc is not None:
-        df.unpersist()
+        worker = threading.Thread(target=df.unpersist)
+        worker.start()
+        worker.join()
 
 
 class KinesisLogsReader:
@@ -255,8 +290,7 @@ class KinesisLogsReader:
 
         if kinesis_client is not None:
             blobs = drain_kinesis_client(kinesis_client, stream_name or "", start_time)
-            raw = self.spark.createDataFrame(pa.table({"data": pa.array(blobs, pa.binary())}))
-            self.df: DataFrame = decode_envelope(raw, typed=typed)
+            self.df: DataFrame = decode_envelope(blob_frame(self.spark, blobs), typed=typed)
             self._decode_pending = True
         elif path is not None:
             # start_time -> modifiedAfter: the AT_TIMESTAMP analog for replay
@@ -292,15 +326,15 @@ class KinesisLogsReader:
         return self.df
 
     def _rows(self) -> Iterator[dict]:
+        # Generator expressions over the frame, not a generator method:
+        # a suspended method frame would hold ``self`` in a reference
+        # cycle, and the cached decode would wait for the cycle collector.
         df = self.to_df()
         if df.isStreaming:
             raise TypeError("streaming reader: use to_df() + writeStream")
         if self._typed:
-            for row in df.toLocalIterator():
-                yield row.asDict()
-        else:
-            for row in df.toLocalIterator():
-                yield dict(row["fields"])
+            return (row.asDict() for row in df.toLocalIterator())
+        return (dict(row["fields"]) for row in df.toLocalIterator())
 
     # Reference iterator protocol (kinesis_logs_reader.py:46-55): the
     # object is its own single-pass iterator, and its CLI peeks the first

@@ -18,9 +18,10 @@ Two parses feed it:
   directories-per-shard replay shard interleaving.
 - binary-column routes (``decode_envelope``: the boto3 drain in
   ``KinesisLogsReader``, or a Kinesis connector's ``data: binary``
-  column): the ``gunzip_text`` pandas UDF, then ``from_json`` with the
-  same schema. One Kinesis shard maps to one input partition, mirroring
-  the reference's shard model (kinesis_logs_reader.py:61-66).
+  column): the ``gunzip_text`` Java kernel (registered on the session
+  by the first such decode), then ``from_json`` with the same schema.
+  No Python worker runs here either. The drain's frame cuts its blobs
+  into byte-balanced contiguous slices, one per partition.
 
 As in the reference, a dropped record is never flattened, and Catalyst
 prunes the envelope columns immediately after the project.
@@ -32,7 +33,11 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from kinesis_logs_reader_spark.functions.gzip_udfs import gunzip_text, gunzip_text_safe
+from kinesis_logs_reader_spark.functions.gzip_udfs import (
+    gunzip_text,
+    gunzip_text_safe,
+    register_kernels,
+)
 
 # Typed VPC Flow Logs schema (reference README.md:31-35; SURVEY.md §2.3).
 FLOW_LOG_FIELDS: list[tuple[str, str]] = [
@@ -157,10 +162,12 @@ def decode_envelope(
 ) -> DataFrame:
     """gzipped-JSON blob column -> one row per log event.
 
-    The binary-column parse: ``gunzip_text`` (``gunzip_text_safe`` in
-    permissive mode, where a corrupt gzip becomes a null envelope), then
-    ``from_json``, then ``flow_log_rows``.
+    The binary-column parse: the ``gunzip_text`` JVM kernel
+    (``gunzip_text_safe`` in permissive mode, where a corrupt gzip or
+    non-UTF-8 text becomes a null envelope), then ``from_json``, then
+    ``flow_log_rows``. The first call on a session registers the kernels.
     """
+    register_kernels(raw.sparkSession)
     gunzip = gunzip_text_safe if mode == "permissive" else gunzip_text
     envelope = F.from_json(gunzip(F.col(data_col)), envelope_schema(typed))
     envelopes = raw.select(envelope.alias("envelope")).select(

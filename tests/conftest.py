@@ -11,10 +11,12 @@ from __future__ import annotations
 import gzip
 import json
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# This checkout's root, so a suite run from a copy tests the copy.
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from kinesis_logs_reader_spark.session import build_session
 

@@ -1,13 +1,17 @@
-"""Property-based tests (hypothesis) for the Python-side kernels that
-back UDFs — driver-side pure functions, no Spark session needed."""
+"""Property-based tests (hypothesis) for the kernels that back UDFs:
+driver-side pure functions, and the JVM gunzip kernels run through
+Spark against CPython's ``gzip``."""
 
 from __future__ import annotations
 
 import gzip
+import random
+import struct
+import zlib
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
-import pandas as pd
+import pytest
 
 from kinesis_logs_reader_spark.functions.gzip_udfs import gunzip_text, gunzip_text_safe
 from kinesis_logs_reader_spark.operators.dedup import _simhash_one
@@ -15,13 +19,27 @@ from kinesis_logs_reader_spark.operators.dedup import _simhash_one
 from tests.conftest import gz_blob
 
 
-@given(st.text(max_size=4096))
-@settings(max_examples=200, deadline=None)
-def test_gzip_roundtrip_property(text: str):
-    """The gunzip kernels' Python bodies invert gzip on any UTF-8 text."""
-    blob = pd.Series([gzip.compress(text.encode(), mtime=0)])
-    assert gunzip_text.func(blob)[0] == text
-    assert gunzip_text_safe.func(blob)[0] == text
+def _kernel(spark, blobs: list[bytes], kernel=gunzip_text_safe) -> list:
+    """One Spark job: ``kernel`` over ``blobs``, in order."""
+    df = spark.createDataFrame([(b,) for b in blobs], "data binary")
+    return [r[0] for r in df.select(kernel("data")).collect()]
+
+
+def _cpython(blob: bytes) -> str | None:
+    """The reference's gunzip (utils.py:18-21); None where it raises."""
+    try:
+        return gzip.decompress(blob).decode("utf-8")
+    except (OSError, EOFError, zlib.error, UnicodeDecodeError):
+        return None
+
+
+@given(st.lists(st.text(max_size=4096), max_size=16))
+@settings(max_examples=10, deadline=None)
+def test_gzip_roundtrip_property(spark, texts: list[str]):
+    """Both JVM gunzip kernels invert gzip on any UTF-8 text."""
+    blobs = [gzip.compress(t.encode(), mtime=0) for t in texts]
+    assert _kernel(spark, blobs, gunzip_text) == texts
+    assert _kernel(spark, blobs, gunzip_text_safe) == texts
 
 
 @given(st.text(max_size=512))
@@ -31,16 +49,97 @@ def test_gzip_deterministic(text: str):
     assert gz_blob({"message": text}) == gz_blob({"message": text})
 
 
-@given(st.integers(min_value=0), st.text(max_size=64))
-@settings(max_examples=200, deadline=None)
-def test_gunzip_text_safe_never_raises_on_a_bit_flip(seed: int, text: str):
-    """PERMISSIVE gunzip turns any single flipped bit — header, deflate
-    body (zlib.error) or trailer — into null or text, never an error."""
-    blob = bytearray(gz_blob({"message": text}))
-    bit = seed % (len(blob) * 8)
-    blob[bit // 8] ^= 1 << (bit % 8)
-    out = gunzip_text_safe.func(pd.Series([bytes(blob)]))[0]
-    assert out is None or isinstance(out, str)
+@given(st.lists(st.tuples(st.integers(min_value=0), st.text(max_size=64)), min_size=1, max_size=16))
+@settings(max_examples=10, deadline=None)
+def test_gunzip_text_safe_never_raises_on_a_bit_flip(spark, flips: list[tuple[int, str]]):
+    """PERMISSIVE gunzip turns any single flipped bit (header, deflate
+    body or trailer) into null or text, never an error: null exactly
+    where CPython raises, its text otherwise."""
+    blobs = []
+    for seed, text in flips:
+        blob = bytearray(gz_blob({"message": text}))
+        bit = seed % (len(blob) * 8)
+        blob[bit // 8] ^= 1 << (bit % 8)
+        blobs.append(bytes(blob))
+    assert _kernel(spark, blobs) == [_cpython(b) for b in blobs]
+
+
+def _member(payload: bytes, flags: int = 0, header: bytes = b"", method: int = 8) -> bytes:
+    """One gzip member built by hand: ``header`` holds the optional fields
+    ``flags`` announces (FEXTRA, FNAME, FCOMMENT, FHCRC)."""
+    deflate = zlib.compressobj(wbits=-zlib.MAX_WBITS)
+    body = deflate.compress(payload) + deflate.flush()
+    trailer = struct.pack("<II", zlib.crc32(payload), len(payload))
+    return bytes([0x1F, 0x8B, method, flags]) + b"\0\0\0\0\0\xff" + header + body + trailer
+
+
+def _kernel_cases() -> list[bytes]:
+    """Hand-made edge cases, then 300 seeded mutations of good blobs."""
+    text = b'{"messageType": "DATA_MESSAGE", "logEvents": [{"id": "\xc3\xa9"}]}'
+    good = gzip.compress(text, mtime=0)
+    cases = [
+        b"",
+        b"\x1f",
+        b"\x1f\x8b\x08",  # short header
+        b"\0\0\0\0",  # zero padding is skipped only after a member
+        gzip.compress(b"", mtime=0),
+        good,
+        good[:-1],
+        good[: len(good) // 2],
+        good + b"\0" * 4,
+        good + b"garbage!",
+        good + b"\x1f",
+        good + good[:12],
+        gzip.compress(text[:20], mtime=0) + b"\0" + gzip.compress(text[20:], mtime=0),
+        _member(text, flags=8, header=b"name.json\0"),
+        _member(text, flags=8, header=b"name-without-nul"),
+        _member(text, flags=4 | 16, header=b"\x03\0abc" + b"comment\0"),
+        _member(text, flags=4, header=b"\x09\0ab"),  # FEXTRA longer than the blob
+        _member(text, flags=2, header=b"\x12\x34"),  # FHCRC, not verified
+        _member(text, method=7),
+        good[:-8] + b"\0\0\0\0" + good[-4:],  # CRC mismatch
+        good[:-4] + b"\x01\0\0\0",  # ISIZE mismatch
+        gzip.compress(b"\xff\xfe", mtime=0),
+        gzip.compress(b"\xed\xa0\x80", mtime=0),  # an encoded surrogate
+        gzip.compress(b"\xc0\xaf", mtime=0),  # overlong
+        gzip.compress(b"\xef\xbb\xbf{}", mtime=0),  # BOM
+    ]
+    rng = random.Random(7)
+    for _ in range(300):
+        blob = bytearray(gzip.compress(rng.randbytes(rng.randint(0, 64)) if rng.random() < 0.3
+                                       else text * rng.randint(1, 4), mtime=0))
+        op = rng.randrange(5)
+        if op == 0:
+            blob = blob[: rng.randrange(len(blob))]
+        elif op == 1:
+            bit = rng.randrange(len(blob) * 8)
+            blob[bit // 8] ^= 1 << (bit % 8)
+        elif op == 2:
+            blob += rng.choice([b"\0" * rng.randint(1, 9), rng.randbytes(rng.randint(1, 9))])
+        elif op == 3:
+            blob[3] = rng.randrange(32)  # header flags
+        else:
+            blob += b"\0" * rng.randint(0, 3) + gzip.compress(text, mtime=0)[: rng.randint(1, 40)]
+        cases.append(bytes(blob))
+    return cases
+
+
+def test_gunzip_kernels_match_cpython(spark):
+    """The kernels against ``gzip.decompress(b).decode("utf-8")`` on hand-made
+    edge cases (multi-member, zero padding, trailing garbage, truncation,
+    header fields, CRC and length mismatches, non-UTF-8, empty) and 300
+    seeded mutations: the permissive kernel is null exactly where CPython
+    raises and equal elsewhere; the strict kernel returns the same text
+    and raises on each of the first hand-made failures."""
+    cases = _kernel_cases()
+    want = [_cpython(b) for b in cases]
+    assert _kernel(spark, cases) == want
+    assert sum(w is None for w in want[25:]) > 100  # the mutations do break most blobs
+    ok = [b for b, w in zip(cases, want) if w is not None]
+    assert _kernel(spark, ok, gunzip_text) == [w for w in want if w is not None]
+    for blob in [b for b, w in zip(cases[:25], want) if w is None]:
+        with pytest.raises(Exception, match="FAILED_EXECUTE_UDF"):
+            _kernel(spark, [blob], gunzip_text)
 
 
 @given(st.lists(st.text(alphabet="abcdefg", min_size=1, max_size=6), min_size=1, max_size=40))
