@@ -255,14 +255,12 @@ def main() -> None:
     # (VERDICT r3 item 8) instead of needing a separate BENCH_COMPARE run.
     import duckdb
 
+    from kinesis_logs_reader_spark.oracle import TABLES
     from kinesis_logs_reader_spark.registry import all_oracle_sql
 
     oracles = all_oracle_sql()
     con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split():
+    for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
         )

@@ -1996,7 +1996,7 @@ def merge_batch_into_index(
     (parquet directories are immutable snapshots), and a crashed merge
     leaves no torn state — the new version simply doesn't exist and the
     merge reruns. Mirrors the replay-idempotence discipline of
-    ``streaming.jobs.run_incremental_dedup_sink``; each version is
+    ``streaming.jobs.apply_incremental_dedup_batch``; each version is
     written bucketed+sorted by digest (:func:`_write_index_bucketed`)
     so probe joins against ANY version stay co-located; at cluster
     scale the version flip is a metastore pointer swap.

@@ -1542,7 +1542,7 @@ def q184_index_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN index-drift monitor (r9): route NEW arrivals against the
     codebook frozen from the EXISTING corpus and measure, per cell,
     load shift and distance inflation — the when-to-retrain signal an
-    incremental index (run_ann_index_sink, streaming/jobs.py) needs:
+    incremental index (apply_ann_index_batch, streaming/jobs.py) needs:
     a cell whose arrivals sit much farther from the centroid than its
     residents (drift_ppm >> 1e6) or whose traffic share jumped is a
     cell the frozen codebook no longer describes.

@@ -1,8 +1,7 @@
 """DuckDB oracle SQL for every declared query (SURVEY.md §2.2).
 
 One ANSI-SQL string per ``queries()`` key, runnable by DuckDB against
-the same parquet tables (views: region nation customer supplier part
-orders lineitem events documents embeddings). Column aliases match the
+the same parquet tables (views: :data:`TABLES`). Column aliases match the
 Spark DataFrames exactly — the driver sorts columns by name before
 hashing values.
 
@@ -17,6 +16,11 @@ Dialect notes encoded here (vs the Spark side):
 """
 
 from __future__ import annotations
+
+# Every view an oracle query may read; each is ``<sf_dir>/<name>.parquet``.
+TABLES = (
+    "region nation customer supplier part orders lineitem events documents embeddings"
+).split()
 
 _REV = "CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))"
 

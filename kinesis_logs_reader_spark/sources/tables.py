@@ -170,8 +170,6 @@ def spread_scan(df: DataFrame) -> DataFrame:
     filter/project scans (their shuffle would cost more than the
     single-task decode).
     """
-    if os.environ.get("SPARK_GRAFT_NO_SPREAD"):
-        return df  # measurement kill-switch (tools/ab_probe.py A/Bs)
     spark = df.sparkSession
     # Retry determinism of the round-robin exchange rests on Spark
     # sorting rows before repartition (SPARK-23207, default on). Assert

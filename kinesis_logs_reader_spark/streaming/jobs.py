@@ -10,9 +10,15 @@ reference kinesis_logs_reader.py:84,103-104).
 
 Watermarks bound state: at 100 TB/day the window state store would
 otherwise grow without limit; every windowed job here declares one.
+
+Sinks that keep external state are ``apply_*_batch(batch_df, batch_id,
+...)`` functions, all run by the one :func:`run_batch_sink`.
 """
 
 from __future__ import annotations
+
+from functools import partial
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -161,27 +167,39 @@ def h9_stream_stream_join(events: DataFrame, window_minutes: int = 60) -> DataFr
     ).select("s_user", "s_ts", "p_ts", "amount")
 
 
-def run_foreach_batch_tsv(
-    stream_df: DataFrame, checkpoint: str, out_dir: str
+def run_batch_sink(
+    stream: DataFrame, checkpoint: str, apply_fn: Callable[[DataFrame, int], None]
 ):
-    """Reference TSV semantics as a streaming sink: each microbatch
-    appends sorted-column TSV part files under ``out_dir/batch=<id>``.
-
-    ``foreachBatch`` gives the batch writer (header, sorted columns —
-    reference __main__.py:15-21) exactly-once per epoch; re-runs of a
-    failed epoch overwrite the same batch directory.
+    """The one foreachBatch runner: a bounded ``availableNow`` run (the
+    reference's drain-until-caught-up loop) calling
+    ``apply_fn(batch_df, batch_id)`` per micro-batch; returns the
+    started query. Sinks pass an ``apply_*_batch`` function with its
+    stores bound by ``functools.partial``. Each writes per-batch-id
+    directories with overwrite, so replaying a failed epoch rewrites
+    the same directories (exactly-once per epoch).
     """
-    from kinesis_logs_reader_spark.sources.sinks import write_tsv
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        write_tsv(batch_df, f"{out_dir}/batch={batch_id}")
-
     return (
-        stream_df.writeStream.foreachBatch(_write)
+        stream.writeStream.foreachBatch(apply_fn)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
     )
+
+
+def apply_tsv_batch(batch_df: DataFrame, batch_id: int, out_dir: str) -> None:
+    """Reference TSV semantics per micro-batch: sorted-column TSV part
+    files with a header (reference __main__.py:15-21) under
+    ``out_dir/batch=<id>``. foreachBatch because the TSV writer is a
+    batch writer; a re-run of a failed epoch overwrites the same batch
+    directory."""
+    from kinesis_logs_reader_spark.sources.sinks import write_tsv
+
+    write_tsv(batch_df, f"{out_dir}/batch={batch_id}")
+
+
+def run_foreach_batch_tsv(stream_df: DataFrame, checkpoint: str, out_dir: str):
+    """:func:`apply_tsv_batch` under :func:`run_batch_sink`."""
+    return run_batch_sink(stream_df, checkpoint, partial(apply_tsv_batch, out_dir=out_dir))
 
 
 def run_available_now(stream_df: DataFrame, checkpoint: str, output_mode: str = "append"):
@@ -272,7 +290,7 @@ def h12_quality_filter(docs: DataFrame) -> DataFrame:
 
 def _store_has_batches(d: str) -> bool:
     """True iff the cumulative store at ``d`` holds at least one written
-    batch partition. Both sink writers land every write in a top-level
+    batch partition. The store sinks land every write in a top-level
     ``batch_id=<id>`` hive partition with parquet files directly inside
     it, so probing ONE directory level suffices — the previous
     recursive ``os.walk`` listed every file in the store on every
@@ -298,9 +316,17 @@ def _store_has_batches(d: str) -> bool:
 def apply_incremental_dedup_batch(
     batch_df: DataFrame, batch_id: int, store_dir: str, out_dir: str
 ) -> None:
-    """One micro-batch of the incremental dedup sink — exposed so replay
-    idempotence is testable: calling this twice with the same batch_id
-    must leave the corpus and digest store unchanged."""
+    """One micro-batch of continuous corpus growth with cross-batch
+    dedup: admit documents whose canonical-text digest is unseen in the
+    digest store (and unique within the batch), append them to
+    ``out_dir`` and their digests to ``store_dir``.
+
+    foreachBatch because the dedup joins against mutable external state:
+    watermarked ``dropDuplicates`` only dedups inside its retention
+    horizon, while the store is unbounded history at ~16 bytes/doc.
+    Both writes land in a ``batch_id=<id>`` partition with overwrite,
+    so calling this twice with the same batch_id leaves the corpus and
+    digest store unchanged."""
     import os
 
     from kinesis_logs_reader_spark.operators.preprocess import dedup_incremental
@@ -332,39 +358,6 @@ def apply_incremental_dedup_batch(
         kept.unpersist()
 
 
-def run_incremental_dedup_sink(
-    docs_stream: DataFrame, checkpoint: str, store_dir: str, out_dir: str
-):
-    """Continuous corpus growth with cross-batch dedup: per micro-batch,
-    admit only documents whose canonical-text digest is unseen in the
-    persistent digest store (and unique within the batch), append the
-    survivors to ``out_dir`` and their digests to ``store_dir``.
-
-    foreachBatch is the right tool because the dedup needs a batch-side
-    join against mutable external state (the store) — watermarked
-    ``dropDuplicates`` can only dedup inside its retention horizon,
-    while the store is unbounded history at ~16 bytes/doc. Failure
-    semantics: REPLAY-IDEMPOTENT. Both writes land in a
-    ``batch_id=<id>`` hive partition with per-partition overwrite, so a
-    mid-batch crash + checkpoint replay overwrites the same
-    subdirectories instead of appending duplicates (the r1/r2 finding
-    against the append-based version: corpus rows written before
-    digests double-admitted on replay). The admitted set itself is
-    deterministic (min_by doc_id within batch, anti join against the
-    store), so the rewrite is byte-stable. At 100 TB the store is a
-    bucketed table so the anti join co-locates without a full shuffle.
-    """
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        apply_incremental_dedup_batch(batch_df, batch_id, store_dir, out_dir)
-
-    return (
-        docs_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def apply_admission_batch(
     batch_df: DataFrame, batch_id: int, store_dir: str, out_dir: str
 ) -> None:
@@ -379,7 +372,10 @@ def apply_admission_batch(
     ``batch_id=<id>`` partition with overwrite, and the store read
     excludes this batch's own partition so a checkpoint replay
     recomputes identical verdicts instead of seeing its own half-done
-    writes.
+    writes. foreachBatch because the state is an unbounded external
+    digest store (~80 bytes/doc), not a watermark-boundable
+    aggregation; each batch pays O(batch) signing plus digest-keyed
+    joins (SCALE.md: warm cost scale-flat on 10x corpus).
     """
     import os
 
@@ -389,13 +385,7 @@ def apply_admission_batch(
     )
 
     spark = batch_df.sparkSession
-
-    def _has_parquet(d: str) -> bool:
-        return os.path.isdir(d) and any(
-            f.endswith(".parquet") for _, _, fs in os.walk(d) for f in fs
-        )
-
-    if _has_parquet(store_dir):
+    if _store_has_batches(store_dir):
         known = spark.read.parquet(store_dir)
         if "batch_id" in known.columns:
             known = known.filter(F.col("batch_id") != batch_id)
@@ -429,29 +419,6 @@ def apply_admission_batch(
         verdicted.unpersist()
 
 
-def run_admission_sink(
-    docs_stream: DataFrame, checkpoint: str, store_dir: str, out_dir: str
-):
-    """Continuous signature-index admission (streaming q160): per
-    micro-batch, verdict against the cumulative store, admit novel
-    docs, append their content+band signatures. foreachBatch because
-    the state is an unbounded external digest store (~80 bytes/doc),
-    not a watermark-boundable state-store aggregation; the admitted
-    corpus NEVER re-hashes — each batch pays O(batch) signing plus
-    digest-keyed joins, exactly the scale contract measured for q160
-    (SCALE.md: warm cost scale-flat on 10x corpus)."""
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        apply_admission_batch(batch_df, batch_id, store_dir, out_dir)
-
-    return (
-        docs_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 # --- streaming ANN-index maintenance (r9, VERDICT r8 item 9) ---------------
 
 IVF_QUANT_GRID = 1024  # floor(v*1024 + 0.5) — the q141 fixed-cell grid
@@ -460,7 +427,7 @@ IVF_QUANT_GRID = 1024  # floor(v*1024 + 0.5) — the q141 fixed-cell grid
 def build_ivf_codebook(spark, sf_dir: str, codebook_dir: str) -> None:
     """Freeze the fixed-cell IVF codebook (the q141 recipe: per-label
     integer mean of grid-quantized coordinates) to parquet, atomically
-    promoted — the one-time trainer for :func:`run_ann_index_sink`.
+    promoted — the one-time trainer for :func:`apply_ann_index_batch`.
 
     The codebook MUST be a frozen artifact, not a session cache: a
     streaming index updated across restarts has to route every batch
@@ -516,7 +483,9 @@ def apply_ann_index_batch(
     admitted index NEVER re-routes — each batch pays O(batch x cells x
     dim), the incremental contract an index-maintenance job needs at
     100 TB (a full rebuild pays O(corpus) once; this pays O(day's
-    arrivals) per day).
+    arrivals) per day). foreachBatch because the state is an unbounded
+    external assignment store keyed for probe joins, not a
+    watermark-boundable aggregation.
     """
     import os
 
@@ -553,34 +522,13 @@ def apply_ann_index_batch(
     )
 
 
-def run_ann_index_sink(
-    vec_stream: DataFrame, checkpoint: str, codebook_dir: str, store_dir: str
-):
-    """Continuous ANN-index maintenance (streaming q141/q160 compose):
-    per micro-batch, route arrivals against the frozen codebook and
-    append their cell assignments. foreachBatch because the state is an
-    unbounded external assignment store keyed for probe joins, not a
-    watermark-boundable aggregation; probes read the store exactly like
-    q141 reads its session index."""
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        apply_ann_index_batch(batch_df, batch_id, codebook_dir, store_dir)
-
-    return (
-        vec_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 # --- r9: streaming PQ-encode maintenance (the q185 family's sink) -----------
 
 
 def build_pq_codebooks_frozen(spark, sf_dir: str, books_dir: str) -> None:
     """Freeze the q185 per-subspace PQ codebooks to ONE parquet table
     (sub, code, dim, mu) with GLOBAL dim ids, atomically promoted —
-    the one-time trainer for :func:`run_pq_encode_sink`. Training
+    the one-time trainer for :func:`apply_pq_encode_batch`. Training
     reuses the exact integer-grid Lloyd's runs (and their persisted
     per-corpus-fingerprint indexes) from operators.similarity; the
     frozen copy exists so every future batch — across restarts and
@@ -627,7 +575,8 @@ def apply_pq_encode_batch(
     batch_id-partitioned overwrite, the q160 discipline. Per batch the
     work is O(batch x K x dim) with only (vec, sub, code) rows
     shuffling — the store grows by M small ints per vector, which is
-    the point of PQ at 100 TB.
+    the point of PQ at 100 TB. foreachBatch because the state is an
+    unbounded external code store that ADC probes join against.
     """
     import os
 
@@ -664,28 +613,6 @@ def apply_pq_encode_batch(
     )
 
 
-def run_pq_encode_sink(
-    vec_stream: DataFrame, checkpoint: str, books_dir: str, store_dir: str
-):
-    """Continuous PQ compression (streaming q185/q187 compose): per
-    micro-batch, encode arrivals against the frozen codebooks and
-    append their codes. foreachBatch for the same reason as
-    run_ann_index_sink: the state is an unbounded external code store
-    that ADC probes join against, not a watermark-boundable
-    aggregation. The q187 distortion report runs unchanged over the
-    store to decide when the frozen books need retraining."""
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        apply_pq_encode_batch(batch_df, batch_id, books_dir, store_dir)
-
-    return (
-        vec_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def apply_shard_plan_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -713,7 +640,9 @@ def apply_shard_plan_batch(
     plan, which is what an ingest pipeline means by sharding. The
     within-batch prefix sum is one window over the micro-batch
     (bounded by trigger size; a deployment with huge batches swaps in
-    q192's range-partitioned two-phase idiom unchanged).
+    q192's range-partitioned two-phase idiom unchanged). foreachBatch
+    because the state is an unbounded external assignment store plus
+    the totals ledger, not a watermark-boundable aggregation.
     """
     import os
 
@@ -772,26 +701,6 @@ def apply_shard_plan_batch(
     )
 
 
-def run_shard_plan_sink(
-    doc_stream: DataFrame, checkpoint: str, store_dir: str, budget: int = 2048
-):
-    """Continuous shard planning (streaming q192): per micro-batch,
-    extend the token-offset shard plan over the arriving documents.
-    foreachBatch because the state is an unbounded external assignment
-    store (plus the immutable per-batch totals ledger that replaces a
-    mutable offset counter), not a watermark-boundable aggregation."""
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        apply_shard_plan_batch(batch_df, batch_id, store_dir, budget)
-
-    return (
-        doc_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def apply_mixture_sample_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -824,7 +733,9 @@ def apply_mixture_sample_batch(
     batch_id < its own and overwrites its own partitions
     byte-for-byte (idempotence, pinned). Corrupt/unreadable ledgers
     fail LOUD; only path-not-found means "first batch" (the
-    apply_shard_plan_batch contract).
+    apply_shard_plan_batch contract). foreachBatch because the state is
+    the bounded external candidate/count ledgers, not a
+    watermark-boundable aggregation.
     """
     import os
 
@@ -943,26 +854,6 @@ def apply_mixture_sample_batch(
     )
 
 
-def run_mixture_sample_sink(
-    doc_stream: DataFrame, checkpoint: str, store_dir: str, budget: int = 300
-):
-    """Continuous mixture sampling (streaming q193): per micro-batch,
-    re-apportion the sample budget over cumulative source sizes and
-    maintain the exact deterministic draw. foreachBatch because the
-    state is the bounded external candidate/count ledgers, not a
-    watermark-boundable aggregation."""
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        apply_mixture_sample_batch(batch_df, batch_id, store_dir, budget)
-
-    return (
-        doc_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 # --- streaming image admission (r12, VERDICT r11 item 8a) -------------------
 
 
@@ -983,7 +874,9 @@ def apply_phash_admission_batch(
     batch index uses. Same replay-idempotence discipline as
     :func:`apply_admission_batch`: both writes land in a
     ``batch_id=<id>`` partition with overwrite, and the store read
-    excludes this batch's own partition.
+    excludes this batch's own partition. foreachBatch because the state
+    is an unbounded external signature store (~40 bytes/image), not a
+    watermark-boundable aggregation.
     """
     import os
 
@@ -1026,27 +919,6 @@ def apply_phash_admission_batch(
         sigs.unpersist()
 
 
-def run_phash_admission_sink(
-    docs_stream: DataFrame, checkpoint: str, store_dir: str, out_dir: str
-):
-    """Continuous image admission (streaming q200): per micro-batch,
-    dHash-sign, verdict against the cumulative signature store, admit
-    novel images, append their signatures. foreachBatch because the
-    state is an unbounded external signature store (~40 bytes/image),
-    not a watermark-boundable aggregation — the q160 admission-sink
-    contract on the visual side table."""
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        apply_phash_admission_batch(batch_df, batch_id, store_dir, out_dir)
-
-    return (
-        docs_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def apply_retrain_monitor_batch(
     batch_df: DataFrame, batch_id: int, store_dir: str, out_dir: str
 ) -> None:
@@ -1074,7 +946,9 @@ def apply_retrain_monitor_batch(
     max batch_id). Per batch the store is scanned once for the join
     and once for the histogram — the same O(store-scan) contract as
     the other admission sinks; at scale both sides are digest/
-    source-bucketed side tables.
+    source-bucketed side tables. foreachBatch because the baseline is
+    an unbounded external snapshot store (digest + one histogram bucket
+    per doc), not a watermark-boundable aggregation.
     """
     import os
 
@@ -1206,28 +1080,6 @@ def apply_retrain_monitor_batch(
     )
 
 
-def run_retrain_monitor_sink(
-    docs_stream: DataFrame, checkpoint: str, store_dir: str, out_dir: str
-):
-    """Continuous retrain monitoring (streaming q205): per micro-batch,
-    score the incoming documents' churn and length-distribution drift
-    against the cumulative snapshot store and emit per-source verdict
-    rows. foreachBatch because the baseline is an unbounded external
-    snapshot store (digest + one histogram bucket per doc), not a
-    watermark-boundable aggregation — the q160/q200 admission-sink
-    contract applied to the monitoring family."""
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        apply_retrain_monitor_batch(batch_df, batch_id, store_dir, out_dir)
-
-    return (
-        docs_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def apply_pagerank_refresh_batch(
     batch_df: DataFrame, batch_id: int, store_dir: str, out_dir: str
 ) -> None:
@@ -1250,6 +1102,9 @@ def apply_pagerank_refresh_batch(
     established replay-idempotence discipline (a checkpoint replay
     overwrites the same partition bit-for-bit, so store AND emitted
     ranks are identical on re-apply; pinned in test_streaming).
+
+    foreachBatch because the rank is a whole-graph fixpoint over an
+    unbounded external edge store.
 
     Batch rows: (c bigint, s bigint) — one row per purchased lineitem,
     i.e. the stream the q210 fact join would produce.
@@ -1298,25 +1153,4 @@ def apply_pagerank_refresh_batch(
     )
     top.write.mode("overwrite").parquet(
         os.path.join(out_dir, f"batch_id={batch_id}")
-    )
-
-
-def run_pagerank_refresh_sink(
-    events_stream: DataFrame, checkpoint: str, store_dir: str, out_dir: str
-):
-    """Continuous PageRank maintenance (streaming q210): per
-    micro-batch, fold purchase events into the cumulative edge store
-    and refresh the supplier rank top-20. foreachBatch because the
-    rank is a whole-graph fixpoint over an unbounded external edge
-    store, not a watermark-boundable aggregation — the q160/q200/q205
-    admission-sink contract applied to the iterative family."""
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        apply_pagerank_refresh_batch(batch_df, batch_id, store_dir, out_dir)
-
-    return (
-        events_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
     )

@@ -18,7 +18,8 @@ from kinesis_logs_reader_spark.registry import (
     all_queries,
     canonical_name,
 )
-from tools.check_parity import TABLES, canon_cell, table_hash
+from kinesis_logs_reader_spark.functions.canon import table_hash
+from kinesis_logs_reader_spark.oracle import TABLES
 
 from tests.conftest import SF_DIR
 

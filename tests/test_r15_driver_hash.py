@@ -23,13 +23,9 @@ import pytest
 
 from kinesis_logs_reader_spark import registry
 from kinesis_logs_reader_spark.functions.canon import table_hash
+from kinesis_logs_reader_spark.oracle import TABLES
 
 SF_DIR = "/root/testdata/sf0.001"
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
 
 RED_TRIO = (
     "q210_supplier_pagerank",

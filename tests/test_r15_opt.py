@@ -31,26 +31,17 @@ def _round_robin_exchanges(df) -> int:
     )
 
 
-def test_q179_heavy_branch_spread_dom_branch_not(spark, monkeypatch):
+def test_q179_heavy_branch_spread_dom_branch_not(spark):
     """q179's digest chain (tokenize + md5 of sorted distinct tokens)
     rides the gated round-robin exchange (the r15 A/B keep: -9%); the
     dominant-lang branch reads the raw scan without it. Exactly ONE
     RoundRobinPartitioning in the plan — a second one would mean the
     cheap (source, lang) branch regained the exchange the r14 doctrine
-    says is pure latency there. Values are spread-independent (pinned
-    against the kill-switch form)."""
+    says is pure latency there. The spread form's values are held to
+    DuckDB by test_query_matches_oracle[q179_data_card]."""
     from kinesis_logs_reader_spark.operators.curation import q179_data_card
 
-    df = q179_data_card(spark, SF_DIR)
-    assert _round_robin_exchanges(df) == 1
-
-    with monkeypatch.context() as m:
-        m.setenv("SPARK_GRAFT_NO_SPREAD", "1")
-        df_off = q179_data_card(spark, SF_DIR)
-    assert _round_robin_exchanges(df_off) == 0
-    assert sorted(map(tuple, df.collect())) == sorted(
-        map(tuple, df_off.collect())
-    )
+    assert _round_robin_exchanges(q179_data_card(spark, SF_DIR)) == 1
 
 
 def test_q172_stays_unspread(spark):

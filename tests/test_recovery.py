@@ -16,7 +16,7 @@ from kinesis_logs_reader_spark.streaming import jobs
 from tests.conftest import data_message, gz_blob, make_event
 
 
-def _run_parquet_sink(spark, src_dir, ckpt, out):
+def _replay_to_parquet(spark, src_dir, ckpt, out):
     """File sink: the fault-tolerant sink that supports checkpoint
     restart (memory sink does not)."""
     stream = read_cwl_stream(spark, path=str(src_dir), typed=False)
@@ -43,13 +43,13 @@ def test_custom_source_checkpoint_recovery(spark, tmp_path):
     (src / "shard0" / "p0.gz").write_bytes(
         gz_blob(data_message([make_event(0), make_event(1)]))
     )
-    assert _run_parquet_sink(spark, src, ckpt, out) == [1024, 1025]
+    assert _replay_to_parquet(spark, src, ckpt, out) == [1024, 1025]
 
     # epoch 2: one more file lands; restart from the SAME checkpoint —
     # only the new file's rows may flow (seen files restored from the
     # source log), so the sink grows by exactly one row, no reprocessing
     (src / "shard0" / "p1.gz").write_bytes(gz_blob(data_message([make_event(2)])))
-    assert _run_parquet_sink(spark, src, ckpt, out) == [1024, 1025, 1026]
+    assert _replay_to_parquet(spark, src, ckpt, out) == [1024, 1025, 1026]
 
 
 def test_foreach_batch_tsv_sink(spark, tmp_path):

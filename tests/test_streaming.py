@@ -7,6 +7,8 @@ test_queries.py via q31-q33).
 
 from __future__ import annotations
 
+from functools import partial
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -405,7 +407,8 @@ def test_incremental_dedup_sink_across_batches(spark, tmp_path):
     # phase 1: docs 0-99 arrive
     docs.filter(F.col("doc_id") < 100).coalesce(1).write.mode("append").parquet(src)
     stream = spark.readStream.schema(docs.schema).option("maxFilesPerTrigger", 1).parquet(src)
-    q = jobs.run_incremental_dedup_sink(stream, ckpt, store, out)
+    apply = partial(jobs.apply_incremental_dedup_batch, store_dir=store, out_dir=out)
+    q = jobs.run_batch_sink(stream, ckpt, apply)
     q.awaitTermination(180)
     n_phase1 = spark.read.parquet(out).count()
 
@@ -414,7 +417,7 @@ def test_incremental_dedup_sink_across_batches(spark, tmp_path):
         "append"
     ).parquet(src)
     stream2 = spark.readStream.schema(docs.schema).option("maxFilesPerTrigger", 1).parquet(src)
-    q2 = jobs.run_incremental_dedup_sink(stream2, ckpt, store, out)
+    q2 = jobs.run_batch_sink(stream2, ckpt, apply)
     q2.awaitTermination(180)
 
     corpus = spark.read.parquet(out)
@@ -527,7 +530,7 @@ def test_admission_sink_streaming_q160_twin(spark, tmp_path):
 
     from kinesis_logs_reader_spark.streaming.jobs import (
         apply_admission_batch,
-        run_admission_sink,
+        run_batch_sink,
     )
 
     src = tmp_path / "src"
@@ -556,8 +559,10 @@ def test_admission_sink_streaming_q160_twin(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(str(src / "*"))
     )
-    q = run_admission_sink(
-        stream, str(tmp_path / "ckpt"), store, out
+    q = run_batch_sink(
+        stream,
+        str(tmp_path / "ckpt"),
+        partial(apply_admission_batch, store_dir=store, out_dir=out),
     )
     q.awaitTermination(120)
     verdicts = {
@@ -599,7 +604,10 @@ def test_admission_sink_survives_session_restart(spark, tmp_path):
     the new file)."""
     import os
 
-    from kinesis_logs_reader_spark.streaming.jobs import run_admission_sink
+    from kinesis_logs_reader_spark.streaming.jobs import (
+        apply_admission_batch,
+        run_batch_sink,
+    )
 
     src = tmp_path / "src"
     store = str(tmp_path / "store")
@@ -618,7 +626,8 @@ def test_admission_sink_survives_session_restart(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(str(src / "*"))
     )
-    run_admission_sink(stream, ckpt, store, out).awaitTermination(120)
+    apply = partial(apply_admission_batch, store_dir=store, out_dir=out)
+    run_batch_sink(stream, ckpt, apply).awaitTermination(120)
     assert {
         r["verdict"] for r in spark.read.parquet(out).collect()
     } == {"novel"}
@@ -638,7 +647,7 @@ def test_admission_sink_survives_session_restart(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(str(src / "*"))
     )
-    run_admission_sink(stream2, ckpt, store, out).awaitTermination(120)
+    run_batch_sink(stream2, ckpt, apply).awaitTermination(120)
 
     verdicts = {
         r["doc_id"]: r["verdict"]
@@ -671,7 +680,7 @@ def test_ann_index_sink_matches_batch_assignment(spark, tmp_path):
     from kinesis_logs_reader_spark.streaming.jobs import (
         apply_ann_index_batch,
         build_ivf_codebook,
-        run_ann_index_sink,
+        run_batch_sink,
     )
     from tests.conftest import SF_DIR
 
@@ -697,8 +706,10 @@ def test_ann_index_sink_matches_batch_assignment(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(str(src / "*"))
     )
-    run_ann_index_sink(
-        stream, str(tmp_path / "ckpt"), codebook, store
+    run_batch_sink(
+        stream,
+        str(tmp_path / "ckpt"),
+        partial(apply_ann_index_batch, codebook_dir=codebook, store_dir=store),
     ).awaitTermination(120)
 
     got = {
@@ -738,7 +749,7 @@ def test_pq_encode_sink_matches_batch_encode(spark, tmp_path):
     from kinesis_logs_reader_spark.streaming.jobs import (
         apply_pq_encode_batch,
         build_pq_codebooks_frozen,
-        run_pq_encode_sink,
+        run_batch_sink,
     )
     from tests.conftest import SF_DIR
 
@@ -763,8 +774,10 @@ def test_pq_encode_sink_matches_batch_encode(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(str(src / "*"))
     )
-    run_pq_encode_sink(
-        stream, str(tmp_path / "ckpt"), books_dir, store
+    run_batch_sink(
+        stream,
+        str(tmp_path / "ckpt"),
+        partial(apply_pq_encode_batch, books_dir=books_dir, store_dir=store),
     ).awaitTermination(120)
 
     got = {
@@ -801,7 +814,7 @@ def test_shard_plan_sink_matches_batch_and_is_monotone(spark, tmp_path):
     from kinesis_logs_reader_spark.sources.tables import load_table
     from kinesis_logs_reader_spark.streaming.jobs import (
         apply_shard_plan_batch,
-        run_shard_plan_sink,
+        run_batch_sink,
     )
     from tests.conftest import SF_DIR
 
@@ -815,8 +828,10 @@ def test_shard_plan_sink_matches_batch_and_is_monotone(spark, tmp_path):
     stream = spark.readStream.schema("doc_id long, text string").parquet(
         str(src1 / "*")
     )
-    run_shard_plan_sink(
-        stream, str(tmp_path / "ckpt1"), store1
+    run_batch_sink(
+        stream,
+        str(tmp_path / "ckpt1"),
+        partial(apply_shard_plan_batch, store_dir=store1),
     ).awaitTermination(120)
     got = (
         spark.read.parquet(os.path.join(store1, "docs"))
@@ -845,14 +860,15 @@ def test_shard_plan_sink_matches_batch_and_is_monotone(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(str(src2 / "*"))
     )
-    run_shard_plan_sink(s, str(tmp_path / "ckpt2"), store2).awaitTermination(120)
+    apply2 = partial(apply_shard_plan_batch, store_dir=store2)
+    run_batch_sink(s, str(tmp_path / "ckpt2"), apply2).awaitTermination(120)
     w1.coalesce(1).write.parquet(str(src2 / "wave1"))
     s2 = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", "1")
         .parquet(str(src2 / "*"))
     )
-    run_shard_plan_sink(s2, str(tmp_path / "ckpt2"), store2).awaitTermination(120)
+    run_batch_sink(s2, str(tmp_path / "ckpt2"), apply2).awaitTermination(120)
     dstore = spark.read.parquet(os.path.join(store2, "docs"))
     t0 = dstore.filter(F.col("batch_id") == 0)
     t1 = dstore.filter(F.col("batch_id") == 1)
@@ -923,7 +939,7 @@ def test_mixture_sample_sink_matches_batch_q193(spark, tmp_path):
     from kinesis_logs_reader_spark.sources.tables import load_table
     from kinesis_logs_reader_spark.streaming.jobs import (
         apply_mixture_sample_batch,
-        run_mixture_sample_sink,
+        run_batch_sink,
     )
     from tests.conftest import SF_DIR
 
@@ -938,8 +954,10 @@ def test_mixture_sample_sink_matches_batch_q193(spark, tmp_path):
     stream = spark.readStream.schema("doc_id long, source string").parquet(
         str(src1 / "*")
     )
-    run_mixture_sample_sink(
-        stream, str(tmp_path / "ckpt1"), store1
+    run_batch_sink(
+        stream,
+        str(tmp_path / "ckpt1"),
+        partial(apply_mixture_sample_batch, store_dir=store1),
     ).awaitTermination(120)
     got1 = sorted(
         tuple(r)
@@ -1008,7 +1026,7 @@ def test_phash_admission_sink_streaming_q200_twin(spark, tmp_path):
 
     from kinesis_logs_reader_spark.streaming.jobs import (
         apply_phash_admission_batch,
-        run_phash_admission_sink,
+        run_batch_sink,
     )
 
     src = tmp_path / "src"
@@ -1035,7 +1053,11 @@ def test_phash_admission_sink_streaming_q200_twin(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(str(src / "*"))
     )
-    q = run_phash_admission_sink(stream, str(tmp_path / "ckpt"), store, out)
+    q = run_batch_sink(
+        stream,
+        str(tmp_path / "ckpt"),
+        partial(apply_phash_admission_batch, store_dir=store, out_dir=out),
+    )
     q.awaitTermination(120)
     verdicts = {
         r["doc_id"]: r["verdict"] for r in spark.read.parquet(out).collect()
@@ -1076,7 +1098,8 @@ def test_phash_admission_sink_survives_session_restart(spark, tmp_path):
     import os
 
     from kinesis_logs_reader_spark.streaming.jobs import (
-        run_phash_admission_sink,
+        apply_phash_admission_batch,
+        run_batch_sink,
     )
 
     src = tmp_path / "src"
@@ -1094,7 +1117,8 @@ def test_phash_admission_sink_survives_session_restart(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(str(src / "*"))
     )
-    run_phash_admission_sink(stream, ckpt, store, out).awaitTermination(120)
+    apply = partial(apply_phash_admission_batch, store_dir=store, out_dir=out)
+    run_batch_sink(stream, ckpt, apply).awaitTermination(120)
     assert {
         r["verdict"] for r in spark.read.parquet(out).collect()
     } == {"novel"}
@@ -1113,7 +1137,7 @@ def test_phash_admission_sink_survives_session_restart(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(str(src / "*"))
     )
-    run_phash_admission_sink(stream2, ckpt, store, out).awaitTermination(120)
+    run_batch_sink(stream2, ckpt, apply).awaitTermination(120)
 
     verdicts = {
         r["doc_id"]: r["verdict"]
@@ -1207,12 +1231,13 @@ def test_retrain_monitor_sink_streaming_q205_twin(spark, tmp_path):
 
 
 def test_retrain_monitor_sink_end_to_end(spark, tmp_path):
-    """run_retrain_monitor_sink drains a file-source replay under
+    """The retrain-monitor sink drains a file-source replay under
     AvailableNow and lands one verdict partition per micro-batch."""
     import os
 
     from kinesis_logs_reader_spark.streaming.jobs import (
-        run_retrain_monitor_sink,
+        apply_retrain_monitor_batch,
+        run_batch_sink,
     )
 
     src = tmp_path / "src"
@@ -1224,11 +1249,14 @@ def test_retrain_monitor_sink_end_to_end(spark, tmp_path):
     stream = spark.readStream.schema(
         "doc_id long, text string, source string"
     ).option("maxFilesPerTrigger", "1").parquet(str(src) + "/*")
-    q = run_retrain_monitor_sink(
+    q = run_batch_sink(
         stream,
         str(tmp_path / "ckpt"),
-        str(tmp_path / "store"),
-        str(tmp_path / "out"),
+        partial(
+            apply_retrain_monitor_batch,
+            store_dir=str(tmp_path / "store"),
+            out_dir=str(tmp_path / "out"),
+        ),
     )
     q.awaitTermination(120)
     rows = spark.read.parquet(str(tmp_path / "out")).collect()
@@ -1311,12 +1339,13 @@ def test_pagerank_refresh_sink_streaming_q210_twin(spark, tmp_path):
 
 
 def test_pagerank_refresh_sink_end_to_end(spark, tmp_path):
-    """run_pagerank_refresh_sink drains a file-source replay under
+    """The PageRank refresh sink drains a file-source replay under
     AvailableNow and lands one rank partition per micro-batch."""
     import os
 
     from kinesis_logs_reader_spark.streaming.jobs import (
-        run_pagerank_refresh_sink,
+        apply_pagerank_refresh_batch,
+        run_batch_sink,
     )
 
     src = tmp_path / "src"
@@ -1332,11 +1361,14 @@ def test_pagerank_refresh_sink_end_to_end(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(str(src) + "/*")
     )
-    q = run_pagerank_refresh_sink(
+    q = run_batch_sink(
         stream,
         str(tmp_path / "ckpt"),
-        str(tmp_path / "store"),
-        str(tmp_path / "out"),
+        partial(
+            apply_pagerank_refresh_batch,
+            store_dir=str(tmp_path / "store"),
+            out_dir=str(tmp_path / "out"),
+        ),
     )
     q.awaitTermination(120)
     parts = sorted(

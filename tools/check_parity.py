@@ -20,13 +20,9 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 import duckdb
 
 from kinesis_logs_reader_spark.functions.canon import canon_cell, table_hash
+from kinesis_logs_reader_spark.oracle import TABLES
 
 SF_DIR = "/root/testdata/sf0.01"
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
 
 # canon_cell / table_hash live in functions/canon.py, shared with the
 # in-driver canonical-row dump so the two can never diverge (r15).

@@ -10,8 +10,10 @@ Usage: python tools/dump_plans.py [sf_dir]
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 ANNOTATED = {
     "q02_filter_predicates": "range/IN/LIKE predicates pushed into the parquet scan (PushedFilters)",
@@ -90,7 +92,7 @@ def main() -> None:
         # the artifact a text file
         plan = plan.replace("\x00", "\\x00")
         out += [f"## {name}", "", f"**Property:** {note}", "", "```", plan.strip(), "```", ""]
-    with open("/root/repo/PLANS.md", "w") as fobj:
+    with open(ROOT / "PLANS.md", "w") as fobj:
         fobj.write("\n".join(out))
     print(f"wrote PLANS.md ({len(ANNOTATED)} plans)")
     spark.stop()

@@ -14,10 +14,14 @@ from __future__ import annotations
 import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import functions as F
+
+from kinesis_logs_reader_spark.oracle import TABLES
 
 SCALE_DIR = "/tmp/spark_graft_scale/sf1"
 COPIES = 10
@@ -109,7 +113,7 @@ def full_soak(spark, queries) -> None:
 
     out = {}
     try:
-        with open("/root/repo/SCALE_FULL.json") as f:
+        with open(ROOT / "SCALE_FULL.json") as f:
             out = json.load(f)
     except Exception:
         pass
@@ -202,7 +206,7 @@ def full_soak(spark, queries) -> None:
                 "n_compute_bound": len(cb),
             }
         )
-    with open("/root/repo/SCALE_FULL.json", "w") as f:
+    with open(ROOT / "SCALE_FULL.json", "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)
     worst = sorted(
         (v["growth"], k)
@@ -232,16 +236,12 @@ def duckdb_soak(timeout_s: float = 600.0) -> None:
 
     from kinesis_logs_reader_spark.registry import all_oracle_sql
 
-    with open("/root/repo/SCALE_FULL.json") as f:
+    with open(ROOT / "SCALE_FULL.json") as f:
         out = json.load(f)
     out.pop("_summary", None)
 
     con = duckdb.connect()
-    tables = (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split()
-    for t in tables:
+    for t in TABLES:
         # Spark wrote the sf~1 tables as directories of part files
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
@@ -294,7 +294,7 @@ def duckdb_soak(timeout_s: float = 600.0) -> None:
             1 for k in out if isinstance(out[k], dict) and "d1_err" in out[k]
         ),
     }
-    with open("/root/repo/SCALE_FULL.json", "w") as f:
+    with open(ROOT / "SCALE_FULL.json", "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)
     print("\n_summary:", json.dumps(out["_summary"]))
 
@@ -349,7 +349,7 @@ def sf3_probe() -> None:
     queries = registry.all_queries()
     out = {}
     try:
-        with open("/root/repo/SCALE3.json") as f:
+        with open(ROOT / "SCALE3.json") as f:
             out = json.load(f)
     except Exception:
         pass
@@ -372,11 +372,7 @@ def sf3_probe() -> None:
     import duckdb
 
     con = duckdb.connect()
-    tables = (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split()
-    for t in tables:
+    for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{SCALE3_DIR}/{t}.parquet/*.parquet')"
@@ -395,7 +391,7 @@ def sf3_probe() -> None:
             out[name]["d3_err"] = f"{type(exc).__name__}: {exc}"[:160]
         print(f"{name}: d3={out[name].get('d3', out[name].get('d3_err'))}", flush=True)
     con.close()
-    with open("/root/repo/SCALE3.json", "w") as f:
+    with open(ROOT / "SCALE3.json", "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)
 
 

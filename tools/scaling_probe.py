@@ -23,19 +23,20 @@ import json
 import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 SCALE_DIR = "/tmp/spark_graft_scale/sf1"
-OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                   "SCALING_r15.json")
+OUT = ROOT / "SCALING_r15.json"
 
 
 def slowest_queries(n: int) -> list[str]:
     from kinesis_logs_reader_spark.registry import all_queries
 
     declared = set(all_queries())
-    with open("/root/repo/SCALE_FULL.json") as f:
+    with open(ROOT / "SCALE_FULL.json") as f:
         data = json.load(f)
     rows = [
         (rec.get("t1"), name)
