@@ -92,7 +92,7 @@ def test_start_time_positioned_read(spark, tmp_path):
     """AT_TIMESTAMP analog (reference kinesis_logs_reader.py:68-77):
     start_time prunes older blobs at file-listing time."""
     import os
-    from datetime import datetime
+    from datetime import datetime, timedelta, timezone
 
     src = tmp_path / "timed"
     src.mkdir()
@@ -110,6 +110,52 @@ def test_start_time_positioned_read(spark, tmp_path):
         spark, str(src), typed=True, start_time=datetime(2022, 1, 1)
     )
     assert {r.srcport for r in positioned.collect()} == {1025}
+
+    # An aware start_time is an instant: new.gz's mtime is
+    # 2023-11-14T22:13:20Z, so 21:00 UTC and 23:00+02:00 both select it,
+    # in any session time zone.
+    before = datetime(2023, 11, 14, 21, tzinfo=timezone.utc)
+    same_instant = datetime(2023, 11, 14, 23, tzinfo=timezone(timedelta(hours=2)))
+    after = datetime(2023, 11, 14, 23, 30, tzinfo=timezone.utc)
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        for session_zone in ("UTC", "Asia/Tokyo"):
+            spark.conf.set("spark.sql.session.timeZone", session_zone)
+            for start, want in ((before, {1025}), (same_instant, {1025}), (after, set())):
+                rows = read_cwl_batch(spark, str(src), typed=True, start_time=start).collect()
+                assert {r.srcport for r in rows} == want, (session_zone, start)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
+
+
+def test_path_replay_spreads_skewed_blob_files(spark, tmp_path):
+    """A backlog of small blobs with Pareto-skewed event counts: no scan
+    partition holds more rows than the largest ceil(n / (2k)) blobs, k
+    the session's parallelism. At Spark's default packing every file is
+    charged a 4 MB open cost, so the scan packs ~n/k files a partition,
+    largest first, and partition 0 holds the ~n/k largest blobs."""
+    import random
+
+    rng = random.Random(7)
+    n, alpha, mean = 128, 1.2, 30
+    counts = [
+        max(1, min(40 * mean, int(mean * (alpha - 1) / alpha / (1 - (i + 0.5) / n) ** (1 / alpha))))
+        for i in range(n)
+    ]
+    rng.shuffle(counts)
+    for i, c in enumerate(counts):
+        shard = tmp_path / f"shard-{i % 4}"
+        shard.mkdir(exist_ok=True)
+        events = [make_event(1000 * i + e) for e in range(c)]
+        (shard / f"{i:04d}.gz").write_bytes(gz_blob(data_message(events)))
+
+    k = spark.sparkContext.defaultParallelism
+    top = sorted(counts, reverse=True)[: -(-n // (2 * k))]
+    df = read_cwl_batch(spark, str(tmp_path), typed=True)
+    per_partition = df.groupBy(F.spark_partition_id()).count().collect()
+    assert sum(r["count"] for r in per_partition) == sum(counts)
+    assert max(r["count"] for r in per_partition) <= sum(top)
+    assert df.rdd.getNumPartitions() >= 2 * k
 
 
 def _deflate_corrupt_blob() -> bytes:

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import duckdb
 import pytest
+from pyspark.sql import DataFrame
 
 import __spark_entry__ as entry
 from kinesis_logs_reader_spark.registry import (
@@ -19,12 +20,21 @@ from kinesis_logs_reader_spark.registry import (
     canonical_name,
 )
 from kinesis_logs_reader_spark.functions.canon import table_hash
+from kinesis_logs_reader_spark.plans.explain import canonical_plan
 from kinesis_logs_reader_spark.oracle import TABLES
 
 from tests.conftest import SF_DIR
 
 QUERIES = all_queries()
 ORACLES = all_oracle_sql()
+
+
+@pytest.fixture(scope="module", params=sorted(ORACLES))
+def built(request, spark) -> tuple[str, DataFrame]:
+    """One declared query, built once for the oracle and plan-identity
+    tests (building is most of what they cost). pytest runs every test
+    of one query before it builds the next, so one is held at a time."""
+    return request.param, QUERIES[request.param](spark, SF_DIR)
 
 
 @pytest.fixture(scope="module")
@@ -77,9 +87,8 @@ def test_q28_approx_distinct_tolerance(spark):
     assert rows and all(r.approx_within_12pct for r in rows)
 
 
-@pytest.mark.parametrize("name", sorted(ORACLES))
-def test_query_matches_oracle(spark, duck, name):
-    sdf = QUERIES[name](spark, SF_DIR)
+def test_query_matches_oracle(duck, built):
+    name, sdf = built
     srows = [tuple(r) for r in sdf.collect()]
     rel = duck.sql(ORACLES[name])
     dcols = [d[0] for d in rel.description]
@@ -87,6 +96,57 @@ def test_query_matches_oracle(spark, duck, name):
     assert sorted(sdf.columns) == sorted(dcols), "column names must match"
     assert len(srows) == len(drows), "row counts must match"
     assert table_hash(sdf.columns, srows) == table_hash(dcols, drows)
+
+
+EXCLUDED_RULES = "spark.sql.optimizer.excludedRules"
+
+
+def _replan(df: DataFrame) -> str:
+    """The physical plan of a fresh planning of ``df``'s logical plan
+    under the session's current conf."""
+    jdf = df._jdf
+    qe = jdf.sparkSession().sessionState().executePlan(
+        jdf.queryExecution().logical(), jdf.queryExecution().mode()
+    )
+    return qe.executedPlan().toString()
+
+
+@pytest.fixture
+def full_plan_strings(spark):
+    """Untruncated plan strings, so a difference past the 25th field shows."""
+    keys = {"spark.sql.debug.maxToStringFields": "10000", "spark.sql.maxMetadataStringLength": "100000"}
+    saved = {k: spark.conf.get(k) for k in keys}
+    for k, v in keys.items():
+        spark.conf.set(k, v)
+    yield
+    for k, v in saved.items():
+        spark.conf.set(k, v)
+
+
+def test_excluded_rules_change_no_plan(spark, full_plan_strings, built):
+    """The session's optimizer exclusions (session._RUNTIME_CONF) are
+    plan-neutral on every declared query: re-planned with no rule
+    excluded, its physical plan is the same. A query that needs an
+    excluded rule fails here, not as a quietly worse plan."""
+    _, df = built
+    excluded = spark.conf.get(EXCLUDED_RULES)
+    assert excluded
+    with_exclusion = canonical_plan(_replan(df))
+    spark.conf.unset(EXCLUDED_RULES)
+    try:
+        without = canonical_plan(_replan(df))
+    finally:
+        spark.conf.set(EXCLUDED_RULES, excluded)
+    assert with_exclusion == without
+
+
+def test_canonical_plan_is_stable_for_a_distinct_aggregate_rewrite(spark, full_plan_strings):
+    """q174's distinct aggregates are rewritten with group ids in a hash
+    order that changes between plannings; the canonical plan does not."""
+    df = QUERIES["q174_reachability_cte"](spark, SF_DIR)
+    plans = [_replan(df) for _ in range(6)]
+    assert "gid#" in plans[0]
+    assert len({canonical_plan(p) for p in plans}) == 1
 
 
 @pytest.mark.parametrize("name", ["q47_simhash", "q48_ann_ivf"])

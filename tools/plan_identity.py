@@ -5,8 +5,10 @@ For each registry query the probe re-plans the same logical plan twice
 — once with the session's baseline conf, once with the candidate conf
 applied via spark.conf.set — interleaved A/B/A/B so JIT warmth and VM
 weather cancel. Plans are canonicalized (expression IDs stripped;
-spark.sql.maxToStringFields / maxMetadataStringLength raised so
-toString never truncates mid-token) and compared per query.
+spark.sql.debug.maxToStringFields / maxMetadataStringLength raised so
+toString never truncates mid-token; ``plans.explain.canonical_plan``)
+and compared per query. tests/test_queries.py holds the session's own
+``excludedRules`` to this standard on every query at sf0.001.
 
 A conf that changes ZERO plans is a pure planning-time win and
 result-identical by construction; the queries it DOES change are
@@ -21,13 +23,12 @@ from __future__ import annotations
 
 import argparse
 import os
-import re
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 os.environ.setdefault("SPARK_GRAFT_SCALE_MODE", "1")
 
@@ -38,17 +39,9 @@ BENCH_PROFILE = {
     "spark.ui.enabled": "false",
     "spark.ui.showConsoleProgress": "false",
     # full-width plan strings so canonicalization is truncation-stable
-    "spark.sql.maxToStringFields": "10000",
+    "spark.sql.debug.maxToStringFields": "10000",
     "spark.sql.maxMetadataStringLength": "100000",
 }
-
-_ID = re.compile(r"#\d+L?")
-_PLAN_ID = re.compile(r"plan_id=\d+")
-
-
-def canon(plan_str: str) -> str:
-    return _PLAN_ID.sub("plan_id=", _ID.sub("#", plan_str))
-
 
 def main() -> None:
     ap = argparse.ArgumentParser()
@@ -61,6 +54,7 @@ def main() -> None:
     if not cand:
         ap.error("at least one --conf required")
 
+    from kinesis_logs_reader_spark.plans.explain import canonical_plan as canon
     from kinesis_logs_reader_spark.session import build_session
     from kinesis_logs_reader_spark.registry import all_queries
 
