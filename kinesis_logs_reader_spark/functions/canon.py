@@ -1,17 +1,12 @@
-"""Canonical row serialization shared by the local parity gate
-(tools/check_parity.py) and the driver-side canonical-row dump
-(registry.export_queries, VERDICT r14 item 1).
-
-One definition so the local mirror and the in-driver diagnostic can
-never canonicalize differently — the whole point of the dump is to
-diff the driver's bytes against the local gate's bytes.
+"""Canonical row serialization for the local parity gate
+(tools/check_parity.py, tests/test_queries.py): one definition of how
+a cell prints and how a result hashes, independent of row order.
 """
 
 from __future__ import annotations
 
 import hashlib
 import math
-import os
 from datetime import date, datetime
 
 
@@ -47,37 +42,3 @@ def table_hash(cols: list[str], rows: list[tuple]) -> str:
         h.update(r.encode("utf-8"))
         h.update(b"\x1e")
     return h.hexdigest()
-
-
-def dump_canonical_rows(df, exported: str, sf_dir: str, dump_dir: str) -> None:
-    """Collect a (small) result and leave a diffable canonical artifact.
-
-    Written for the driver-red diagnosis loop: the file carries the
-    Spark dtypes, the rows in returned order, the sorted canonical rows,
-    and the order-insensitive hash — enough to tell apart a value
-    divergence, an order divergence, and a type-canonicalization
-    divergence without re-running anything. Hard-capped at 100k rows so
-    a mis-gated call can never turn a query into a driver collect.
-    """
-    rows = df.limit(100_001).collect()
-    if len(rows) > 100_000:
-        return
-    cols = df.columns
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    returned = [
-        "\x1f".join(canon_cell(r[i]) for i in order) for r in rows
-    ]
-    os.makedirs(dump_dir, exist_ok=True)
-    sf_tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    path = os.path.join(dump_dir, f"{exported}__{sf_tag}.txt")
-    with open(path, "w") as f:
-        f.write(f"# query: {exported}\n# sf_dir: {sf_dir}\n")
-        f.write(f"# dtypes: {df.dtypes}\n")
-        f.write(f"# n_rows: {len(rows)}\n")
-        f.write(f"# hash: {table_hash(cols, rows)}\n")
-        f.write("# --- rows (returned order, column-name-sorted cells) ---\n")
-        for r in returned:
-            f.write(r + "\n")
-        f.write("# --- rows (sorted canonical) ---\n")
-        for r in sorted(returned):
-            f.write(r + "\n")

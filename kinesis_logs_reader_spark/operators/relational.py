@@ -25,7 +25,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from kinesis_logs_reader_spark.plans.output import presentation_order
 from kinesis_logs_reader_spark.sources.tables import load_table
 
 
@@ -135,25 +134,19 @@ def _d38(name: str) -> Column:
 def q01_project_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B1: project + alias + arithmetic. Narrow: no shuffle, full pushdown.
 
-    Output order is two-mode (plans/output.py): the hashed path keeps
-    the global ORDER BY; SPARK_GRAFT_SCALE_MODE=1 ships per-partition
-    order instead, because at 100 TB the presentation sort is the ONLY
-    exchange in this otherwise map-only plan.
+    The presentation ORDER BY (the reference CLI's one sorted output
+    order) is the only exchange in this otherwise map-only plan.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    return presentation_order(
-        li.select(
-            "l_orderkey",
-            "l_linenumber",
-            # per-row revenue in scaled int64; half-up happens in integer
-            # units (_round_scaled), so no per-row BigDecimal round and
-            # the final /100.0 is the exact nearest-double of a 2-decimal
-            # value (aggregated sums still use _money's decimal division)
-            _round_scaled(_rev4(), 4, 2).alias("revenue"),
-        ),
+    return li.select(
         "l_orderkey",
         "l_linenumber",
-    )
+        # per-row revenue in scaled int64; half-up happens in integer
+        # units (_round_scaled), so no per-row BigDecimal round and
+        # the final /100.0 is the exact nearest-double of a 2-decimal
+        # value (aggregated sums still use _money's decimal division)
+        _round_scaled(_rev4(), 4, 2).alias("revenue"),
+    ).orderBy("l_orderkey", "l_linenumber")
 
 
 def q02_filter_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -212,7 +205,7 @@ def q04_cast_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             F.col("o_orderdate").cast("date").cast("string").alias("day_str"),
         )
-        .transform(presentation_order, "o_orderkey")
+        .orderBy("o_orderkey")
     )
 
 
@@ -270,7 +263,7 @@ def q05_join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
             _money(F.col("_r4"), 4).alias("revenue"),
             "n_items",
         )
-        .transform(presentation_order, "c_custkey")
+        .orderBy("c_custkey")
     )
 
 
@@ -669,17 +662,15 @@ def q21_sort_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket_by = F.when(
         F.col("pri").isNull(), F.lit(2**33).cast("bigint")
     ).otherwise(-string_order_key(F.col("pri")))
-    # presentation_order (r14): the final ORDER BY rnk is pure
-    # presentation — strict mode keeps the global sort; scale mode
-    # drops the table-sized range exchange (the declared two-mode
-    # output contract, plans/output.py).
+    # The final ORDER BY rnk is pure presentation: the reference CLI's
+    # one sorted output order.
     return global_row_number(
         orders.select("o_orderkey", pri),
         [F.col("pri").desc_nulls_last(), F.col("o_orderkey")],
         bucket_by=bucket_by,
         out_col="rnk",
         spread_by=F.col("o_orderkey"),
-    ).transform(presentation_order, "rnk")
+    ).orderBy("rnk")
 
 
 def q22_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -757,7 +748,7 @@ def q26a_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.size(toks).alias("n_words"),
             toks.getItem(0).alias("word0"),
         )
-        .transform(presentation_order, "p_partkey")
+        .orderBy("p_partkey")
     )
 
 
@@ -780,7 +771,7 @@ def q26b_datetime_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("string")
             .alias("const_ts"),
         )
-        .transform(presentation_order, "o_orderkey")
+        .orderBy("o_orderkey")
     )
 
 
@@ -812,7 +803,7 @@ def q26c_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.log(F.col("l_extendedprice")), 6).cast("double").alias("lnp"),
             F.round(F.sqrt(F.col("l_quantity")), 6).cast("double").alias("sq"),
         )
-        .transform(presentation_order, "l_orderkey", "l_linenumber")
+        .orderBy("l_orderkey", "l_linenumber")
     )
 
 
@@ -1177,7 +1168,7 @@ def q58_map_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.size(F.map_keys(m)).alias("n_keys"),
             F.element_at(m, "k").alias("k_val"),
         )
-        .transform(presentation_order, "event_id")
+        .orderBy("event_id")
     )
 
 
@@ -1276,7 +1267,7 @@ def q64_date_format(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("epoch_s"),
         )
-        .transform(presentation_order, "o_orderkey")
+        .orderBy("o_orderkey")
     )
 
 

@@ -20,7 +20,6 @@ from kinesis_logs_reader_spark.functions.text import (
     stopword_count,
     tokens,
 )
-from kinesis_logs_reader_spark.plans.output import presentation_order
 from kinesis_logs_reader_spark.sources.tables import load_table, spread_scan
 
 
@@ -340,7 +339,7 @@ def q61_token_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size("tb").cast("int").alias("ws_tokens"),
         "bpe_tokens",
         roll.alias("roll_fp"),
-    ).transform(presentation_order, "doc_id")
+    ).orderBy("doc_id")
 
 
 def q49_multimodal_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -980,7 +979,7 @@ def q150_charset_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             "suspect",
             (F.col("alpha_ratio") < 0.5) | (F.col("other_ratio") > 0.1),
         )
-        .transform(presentation_order, "doc_id")
+        .orderBy("doc_id")
     )
 
 

@@ -122,25 +122,16 @@ def q35b_median_native(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q37_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J (applyInPandas grouped map), oracle-backed: per-customer
     z-score vs DuckDB's windowed AVG/STDDEV_POP."""
-    from kinesis_logs_reader_spark.plans.output import presentation_order
-
     out = zscore_orders_per_customer(spark, sf_dir)
-    # presentation_order (r14): the final ORDER BY is presentation —
-    # scale mode drops the table-sized range exchange after the
-    # grouped-map stage (the declared two-mode output contract)
-    return presentation_order(
-        out.select(
-            F.col("o_custkey").alias("custkey"),
-            F.col("o_orderkey").alias("orderkey"),
-            # + 0.0 collapses IEEE -0.0 (appears when a z-score rounds
-            # to zero) so both engines emit the same canonical zero
-            (F.round("zscore", 4).cast("double") + F.lit(0.0)).alias(
-                "zscore"
-            ),
-        ),
-        "custkey",
-        "orderkey",
-    )
+    # The final ORDER BY is presentation: the reference CLI's one
+    # sorted output order, after the grouped-map stage.
+    return out.select(
+        F.col("o_custkey").alias("custkey"),
+        F.col("o_orderkey").alias("orderkey"),
+        # + 0.0 collapses IEEE -0.0 (appears when a z-score rounds
+        # to zero) so both engines emit the same canonical zero
+        (F.round("zscore", 4).cast("double") + F.lit(0.0)).alias("zscore"),
+    ).orderBy("custkey", "orderkey")
 
 
 def q37b_zscore_window(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -12,9 +12,7 @@ instead of degrading (VERDICT r2 "What's missing" #3).
 
 from __future__ import annotations
 
-import functools
 import importlib
-import os
 
 from collections.abc import Callable
 
@@ -27,57 +25,8 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 # Declared surface (SURVEY.md §2.2): counts asserted on every assembly so a
 # vanished module or renamed function cannot silently shrink the inventory.
-N_QUERIES = 228  # r13 late: +q206 scalable rank suite (rank.py oracle cert),
-#                      +q207/q208/q209 TPC-H Q19/Q17/Q21 optimizer showcases,
-#                      +q210 weighted bipartite PageRank (iterative link analysis)
-#                  r7: +q161 epoch shuffle, +q162 graded eval containment,
-#                      +q163 SRP-banded cosine pairs (q50's scale twin),
-#                      +q164 dup-cluster-safe train/val/test split,
-#                      +q165 hard-negative mining (contrastive pairs)
-#                  r8: +q166 distributed BPE-merge training (iterative),
-#                      +q167 ANN recall@10 / nprobe sweep,
-#                      +q168 mutual-NN pair mining (exact int grid),
-#                      +q169 BPE encode / per-source compression,
-#                      +q170 exact next-fit packing (JVM in-array fold),
-#                      +q171 half-sample bootstrap CIs (md5-bit replicas),
-#                      +q172 marginal-novelty curve per ingest decile,
-#                      +q173 hourly resample + forward-fill (gap-fill),
-#                      +q174 bounded-depth reachability (recursive CTE),
-#                      +q175 frame-level dedup audit (binary fan-out),
-#                      +q176 ANN ranking quality: MRR + NDCG@10 (int units),
-#                      +q177 span-level quality pruning (token-yield ledger),
-#                      +q178 difficulty-stratified eval sampling,
-#                      +q179 per-source data card (exact-integer datasheet),
-#                      +q180 RAG context assembly audit (budgeted top-k pack),
-#                      +q181 eval-sample placement audit (q178 x q164),
-#                      +q182 last-touch attribution (asof struct-carry)
-N_ORACLES = 228  # all r7-r10 additions are fully oracle-backed
-#                  r9: +q183 vocabulary drift monitor (version halves),
-#                      +q184 ANN index-drift monitor (frozen-codebook routing),
-#                      +q185 product-quantization ADC top-k (4 per-subspace
-#                           integer-Lloyd's codebooks, oracle retrains all 4),
-#                      +q186 int8 quantization recall@10 audit,
-#                      +q187 PQ codebook distortion report,
-#                      +q188 two-stage PQ retrieval (ADC shortlist -> exact re-rank),
-#                      +q189 KMV-sketch cross-source overlap (est vs exact)
-#                  r11: +q194 perceptual-hash (dHash) image near-dup pairs,
-#                      +q195 cross-encoder-shaped rerank of q188's shortlist,
-#                      +q189b sketch-only KMV overlap (production twin),
-#                      +q196 per-clip scene-cut profile (multimodal temporal),
-#                      +q131b single-scan sketch table profile (production twin),
-#                      +q197 per-clip audio VAD segmentation (multimodal audio),
-#                      +q198 per-label embedding dispersion / nearest-cluster audit
-#                  r12: +q199 cross-modal (dHash + lexical) RRF retrieval,
-#                      +q200 incremental image admission (phash signature index),
-#                      +q201 shuffle-key skew/repartition advisor,
-#                      +q202 retrieval-threshold calibration (integer ROC sweep),
-#                      +q203 cross-snapshot corpus delta ledger
-#                  r13: +q131c deterministic-sketch table profile (the
-#                       hash-green production half of the q131 family),
-#                      +q204 Z-order layout advisor (grid-snap-then-curve
-#                       file-skipping simulation over layout.py's writers),
-#                      +q205 per-source retrain trigger (q203 churn x
-#                       length-histogram drift, four-class verdict)
+N_QUERIES = 228
+N_ORACLES = 228
 
 _OPERATOR_MODULES = (
     "analytics",
@@ -146,592 +95,6 @@ def all_oracle_sql() -> dict[str, str]:
 # tests, bench, and tools use ``all_queries()``; only __spark_entry__
 # exports the rotated view.
 #
-# Round-5 window (historical; all 50 rows recorded in
-# CORRECTNESS_r05.json — 48 hash-green + the 2 by-design rows-only
-# paths q75/q109, since oracle-backed in r6). Kept for provenance.
-DRIVER_WINDOW_R5: list[str] = [
-    # r4 hash-reds, hardened this round — re-check first
-    "q41_token_stats",
-    "q93_domain_mix",
-    "q94_pack_sequences",
-    "q96_stratified_sample",
-    "q99_centroid_outliers",
-    # never-checked keys, oldest first (r2-r3 era)
-    "q35_median_segment",
-    "q35b_median_native",
-    "q37_zscore",
-    "q37b_zscore_window",
-    "q38_price_histogram",
-    "q39_mode_per_group",
-    "q86_unpivot",
-    "q88_date_spine",
-    "q100_scd2",
-    "q102_adaptive_length_filter",
-    "q47_simhash",
-    "q48_ann_ivf",
-    "q75_ann_ivf_kmeans",
-    "q109_semdedup",
-    # round-4 additions (LLM-pipeline extension batches 2-7)
-    "q110_rrf_hybrid",
-    "q111_embedding_quantize",
-    "q112_chunk_dedup",
-    "q113_blocklist_filter",
-    "q114_mixture_weights",
-    "q115_unigram_lm",
-    "q116_containment_dup",
-    "q117_zipf_fit",
-    "q118_canonical_select",
-    "q119_knn_join",
-    "q120_bpe_pair_counts",
-    "q121_lang_confusion",
-    "q122_substring_dedup",
-    "q123_minhash_accuracy",
-    "q124_reconstruct_chunks",
-    "q125_dsir_sampling",
-    "q126_length_buckets",
-    "q127_centroid_classify",
-    "q128_split_leakage",
-    "q129_dedup_pipeline",
-    "q130_span_decontamination",
-    "q131_table_profile",
-    "q132_countmin_sketch",
-    "q133_bloom_decontamination",
-    "q134_ngram_novelty",
-    "q135_jl_projection",
-    "q136_source_overlap",
-    "q137_distribution_drift",
-    "q138_heaps_law",
-    "q139_pmi_collocations",
-    "q140_weighted_sample",
-]
-
-
-# Round-6 window (ACTIVE, VERDICT r5 item #1): the never-checked keys
-# that overflowed the r5 window (q141-q157, late-r4 batches 7-13) plus
-# the r5 additions (q110b/q158/q159) and the newly oracle-backed
-# q75/q109 (VERDICT r5 item #4), then relational re-checks for
-# regression coverage. After r6 every oracle-backed key has >= 1 green
-# driver row (the stated target).
-DRIVER_WINDOW_R6: list[str] = [
-    # r5 additions (oracle-backed, never checked)
-    "q110b_rrf_topk",
-    "q158_fuzzy_variants",
-    "q158b_fuzzy_variants_banded",  # r6 production twin (VERDICT r5 #3)
-    "q159_dup_authority",
-    # rows-only in r5, oracle-backed this round via centroid literals
-    "q75_ann_ivf_kmeans",
-    "q109_semdedup",
-    # new in r6: incremental ingest dedup vs the persisted corpus index
-    "q160_incremental_dedup",
-    # never-checked overflow from r5
-    "q141_ivf_fixed_probe",
-    "q143_repetition_runs",
-    "q144_token_entropy",
-    "q145_oov_rate",
-    "q146_jaccard_threshold_sweep",
-    "q147_bigram_lm",
-    "q148_template_mining",
-    "q149_source_signature",
-    "q150_charset_profile",
-    "q151_candidate_degree",
-    "q152_perplexity_buckets",
-    "q152b_perplexity_buckets_scalable",  # r6 production twin (VERDICT r5 #2)
-    "q153_dedup_survivorship",
-    "q154_boundary_overlap",
-    "q155_lsh_band_sensitivity",
-    "q156_training_order",
-    "q157_epoch_plan",
-    # relational re-checks (regression coverage) fill the remaining slots
-    "q01_project_arith",
-    "q05_join_inner",
-    "q10_join_range",
-    "q13_tpch_q1",
-    "q15_rollup",
-    "q18_window_rank",
-    "q20_window_running_sum",
-    "q22_topk",
-    "q24_intersect_except",
-    "q26a_string_funcs",
-    "q26b_datetime_funcs",
-    "q26c_math_funcs",
-    "q26d_array_funcs",
-    "q26e_json_funcs",
-    "q27_join_full_outer",
-    "q29_embedding_norm",
-    "q34_join_right",
-    "q36_supplier_nation",
-    "q52_percentiles",
-    "q53_pivot",
-    "q54_posexplode",
-    "q55_scalar_subquery",
-    "q57_string_extra",
-    "q58_map_funcs",
-    "q59_exists_subquery",
-    "q60_range_frame",
-    "q63_window_analytics",
-    "q64_date_format",
-    "q65_grouping_sets",
-    "q66_array_agg",
-    "q103_approx_percentile",
-    "q107_variant_json",
-    "q108_cube",
-    "q02_filter_predicates",
-]
-
-# Round-7 window (STAGED — swap DRIVER_WINDOW to this after the r6
-# driver run lands green). Once r6 completes, every oracle-backed key
-# has >= 1 green driver row, so r7 rotates to re-verification:
-# (1) the whole MinHash/band-digest family, whose digest kernel changed
-#     in r6 (NULL-propagating banded_digest) — values are unchanged on
-#     the fixture corpus, but a driver re-check closes the loop;
-# (2) the q160 surface and its twins (newest code);
-# (3) the keys whose only driver rows date to r1/r2 (oldest evidence);
-# (4) heavy/knife-edge rows worth periodic re-confirmation.
-DRIVER_WINDOW_R7: list[str] = [
-    # (1) band-digest family re-checks after the c1->c2 contract bump
-    "q46_minhash_lsh",
-    "q74_dup_clusters",
-    "q123_minhash_accuracy",
-    "q128_split_leakage",
-    "q129_dedup_pipeline",
-    "q151_candidate_degree",
-    "q155_lsh_band_sensitivity",
-    "q159_dup_authority",
-    "q160_incremental_dedup",
-    # (2) r6 production twins
-    "q152b_perplexity_buckets_scalable",
-    "q158b_fuzzy_variants_banded",
-    "q110b_rrf_topk",
-    "q75_ann_ivf_kmeans",
-    "q109_semdedup",
-    # (3) oldest driver evidence (r1/r2-era greens, never re-windowed)
-    "q03_case_when",
-    "q04_cast_coalesce",
-    "q06_join_broadcast",
-    "q07_join_left_outer",
-    "q08_join_semi",
-    "q09_join_anti",
-    "q11_join_cross",
-    "q12_join_self",
-    "q16_having",
-    "q19_window_lag",
-    "q21_sort_nulls",
-    "q23_union",
-    "q25_distinct",
-    "q28_approx_distinct",
-    "q31_tumbling_window",
-    "q32_sliding_window",
-    "q33_session_window",
-    "q35_median_segment",
-    "q37_zscore",
-    "q40_dedup_exact",
-    "q41_token_stats",
-    "q42_quality_score",
-    "q43_cosine_topk",
-    "q44_ngram_jaccard",
-    "q45_fingerprint",
-    "q47_simhash",
-    "q48_ann_ivf",
-    "q49_multimodal_binary",
-    "q50_cosine_dup_pairs",
-    "q51_lang_id",
-    # (4) heavy / knife-edge periodic re-confirmation
-    "q93_domain_mix",
-    "q94_pack_sequences",
-    "q96_stratified_sample",
-    "q99_centroid_outliers",
-    "q103_approx_percentile",
-    "q110_rrf_hybrid",
-    "q115_unigram_lm",
-    "q119_knn_join",
-    "q122_substring_dedup",
-]
-
-# Round-8 window (STAGED — swap DRIVER_WINDOW to this after the r7
-# driver run lands green). Rotation policy: no key's driver evidence
-# ages past ~4 rounds. Computed from the cumulative r1-r6 tally plus
-# the r7 window: after r7, the oldest evidence is (1) the ten r3-era
-# keys, (2) the four keys staged for r7 but cut by the [:50] window,
-# (3) the r4-era block, oldest-first; trailing slots recheck r5-era
-# curation keys.
-DRIVER_WINDOW_R8: list[str] = [
-    # (0) r7 additions — never driver-checked (highest rotation priority)
-    "q161_epoch_shuffle",
-    "q162_eval_containment",
-    "q163_srp_banded_pairs",
-    "q164_cluster_safe_split",
-    "q165_hard_negatives",
-    # (1) r3-era driver rows (oldest on the board after r7)
-    "q02_filter_predicates",
-    "q107_variant_json",
-    "q108_cube",
-    "q14_count_distinct",
-    "q17_global_agg",
-    "q60_range_frame",
-    "q63_window_analytics",
-    "q64_date_format",
-    "q65_grouping_sets",
-    "q66_array_agg",
-    # (2) staged for r7 but cut by the 50-slot window
-    "q115_unigram_lm",
-    "q119_knn_join",
-    "q122_substring_dedup",
-    "q131_table_profile",
-    # (3) r4-era driver rows
-    "q101_winnowing",
-    "q104_incremental_dedup",
-    "q105_vocab_coverage",
-    "q106_udtf_chunks",
-    "q61_token_regex",
-    "q62_asof_join",
-    "q67_stats_agg",
-    "q68_shipping_priority",
-    "q69_local_supplier_volume",
-    "q70_returned_items",
-    "q71_large_volume_customer",
-    "q72_inactive_rich_customers",
-    "q73_cheapest_lineitem_per_part",
-    "q76_merge_upsert",
-    "q77_hash_split",
-    "q78_normalize_dedup",
-    "q79_pii_scrub",
-    "q80_chunk_documents",
-    "q82_higher_order_funcs",
-    "q83_funnel",
-    "q84_retention",
-    "q85_event_transitions",
-    "q87_lateral_topn",
-    "q89_decontamination",
-    "q90_curation_pipeline",
-    "q91_gopher_rules",
-    "q92_repetition",
-    "q95_tfidf",
-    "q97_quality_audit",
-    "q98_bm25",
-    # (4) r5-era re-checks (oldest of that block)
-    "q100_scd2",
-    "q102_adaptive_length_filter",
-    "q111_embedding_quantize",
-    "q112_chunk_dedup",
-    "q113_blocklist_filter",
-    "q114_mixture_weights",
-]
-
-# Round-8 ACTIVE window. The r7 driver correctness run never landed
-# (no CORRECTNESS_r07.json exists), so the R7 window's re-checks —
-# most critically the band-digest family whose digest kernel changed
-# in r6 (c1->c2 NULL-propagating concat, then c3 band-namespacing)
-# AFTER those keys' last driver rows — are still without fresh driver
-# evidence. Blend: (a) never-driver-checked r7/r8 additions, (b) the
-# R7 head (digest-kernel family + newest q160-era code), (c) as many
-# of the R7 tail's r1/r2-era oldest-evidence keys as fit in 50.
-# DRIVER_WINDOW_R8 (above) remains the staged source list for R9.
-DRIVER_WINDOW_R8_ACTIVE: list[str] = (
-    [
-        # r8 additions — never driver-checked, written this round
-        "q166_bpe_train",
-        "q167_ann_recall",
-        "q168_mutual_nn",
-        "q169_bpe_encode",
-        "q170_pack_nextfit",
-        "q171_bootstrap_ci",
-        "q172_novelty_curve",
-        "q173_resample_ffill",
-        "q174_reachability_cte",
-        "q175_frame_dedup",
-        "q176_ann_ranking_quality",
-        "q177_span_quality_prune",
-        "q178_stratified_eval_sample",
-        "q179_data_card",
-        "q180_rag_context_assembly",
-        "q181_eval_sample_audit",
-        "q182_last_touch_attribution",
-    ]  # 17 never-checked r8 keys lead; q161-q165 next; then R7 re-checks
-    + DRIVER_WINDOW_R8[:5]        # q161-q165: never driver-checked
-    + DRIVER_WINDOW_R7[:14]       # band-digest family + q160-era + q75/q109
-    + DRIVER_WINDOW_R7[14:]       # r1/r2-era oldest evidence (trimmed by [:50])
-)
-
-# Round-9 window: the r3/r4/r5-era tail DISPLACED by the R8 active
-# window — the 50 keys whose driver evidence is oldest after r8
-# (q78/q90 included, so the r9 normalize_text kernel change is
-# driver-certified in the same round it lands). Rotation policy: no
-# key's driver evidence ages past ~4 rounds.
-DRIVER_WINDOW_R9: list[str] = [
-    k for k in DRIVER_WINDOW_R8 if k not in DRIVER_WINDOW_R8_ACTIVE[:50]
-]
-
-# Round-9 ACTIVE window (historical): the seven r9 additions led,
-# followed by the staged R9 tail; ran 50/50 green (CORRECTNESS_r09).
-# The seven R9-tail keys displaced past the [:50] cut
-# (q98/q100/q102/q111-q114) are folded into the R10 window below.
-DRIVER_WINDOW_R9_ACTIVE: list[str] = (
-    [
-        "q183_vocab_drift",
-        "q184_index_drift",
-        "q185_pq_adc",
-        "q186_int8_recall",
-        "q187_pq_distortion",
-        "q188_pq_reranked",
-        "q189_kmv_overlap",
-    ]
-    + DRIVER_WINDOW_R9
-)[:50]
-
-# Round-10 ACTIVE window (historical): ran 50/50 green
-# (CORRECTNESS_r10.json). Kept verbatim — including the original
-# over-length tail trimmed by the [:50] slice — as the audit record of
-# what actually ran; the r11 window below is exact-length with a
-# uniqueness assert (ADVICE r10).
-DRIVER_WINDOW_R10_ACTIVE: list[str] = [
-    # (0) r10 additions
-    "q45b_fingerprint_agg",
-    "q190_opq_rotation",
-    "q191_eval_split_regen",
-    "q151b_candidate_volume",
-    "q192_shard_plan",
-    "q193_mixture_plan",
-    # (1) changed kernels whose driver rows predate the change
-    "q12_join_self",
-    "q118_canonical_select",
-    "q148_template_mining",
-    "q189_kmv_overlap",
-    "q78_normalize_dedup",
-    "q90_curation_pipeline",
-    "q05_join_inner",
-    "q07_join_left_outer",  # r10 agg-then-join rewrite (soak 26x audit)
-    "q61_token_regex",  # r10 translate lexer-count rewrite (weak-row 5.9x)
-    "q97_quality_audit",  # r10 anti-join key-projection + SHJ (-35% sf~1)
-    "q139_pmi_collocations",  # r10 map-only pair-total rewrite (-43% sf~1)
-    # r10 shared cached_unigram_scored rewire (construction changed in
-    # all five; q191 is already above in section 0's composition chain)
-    "q115_unigram_lm",
-    "q152_perplexity_buckets",
-    "q152b_perplexity_buckets_scalable",
-    "q178_stratified_eval_sample",
-    "q181_eval_sample_audit",
-    # (2) displaced by the r9 [:50] cut
-    "q98_bm25",
-    "q100_scd2",
-    "q102_adaptive_length_filter",
-    "q111_embedding_quantize",
-    "q112_chunk_dedup",
-    "q113_blocklist_filter",
-    "q114_mixture_weights",
-    # (3) r4-era evidence (q98 above is also r4-era)
-    "q103_approx_percentile",
-    "q31_tumbling_window",
-    "q32_sliding_window",
-    "q33_session_window",
-    "q40_dedup_exact",
-    "q42_quality_score",
-    "q43_cosine_topk",
-    "q44_ngram_jaccard",
-    "q45_fingerprint",
-    "q49_multimodal_binary",
-    "q50_cosine_dup_pairs",
-    "q51_lang_id",
-    # (4) oldest r5-era evidence
-    "q110_rrf_hybrid",
-    "q116_containment_dup",
-    "q117_zipf_fit",
-    "q120_bpe_pair_counts",
-    "q121_lang_confusion",
-    "q124_reconstruct_chunks",
-    "q125_dsir_sampling",
-    "q126_length_buckets",
-    "q127_centroid_classify",
-    "q130_span_decontamination",
-    "q132_countmin_sketch",
-    "q133_bloom_decontamination",
-    "q134_ngram_novelty",
-    "q135_jl_projection",
-    "q136_source_overlap",
-    "q137_distribution_drift",
-    "q138_heaps_law",
-    "q139_pmi_collocations",
-    "q140_weighted_sample",
-    "q35_median_segment",
-    "q35b_median_native",
-][:50]
-
-# Round-13 window (historical): ran 47/50 green (CORRECTNESS_r13; the
-# three reds are the never-green q210/q213/q215, kept at the head of
-# the r14 window below).
-DRIVER_WINDOW_R13: list[str] = [
-    # (0) new this round
-    "q206_scalable_rank_suite",
-    "q210_supplier_pagerank",
-    "q211_volume_shipping",
-    "q212_customer_distribution",
-    "q213_line_boilerplate",
-    "q214_salted_rollup",
-    "q215_cluster_balanced_sample",
-    "q216_triangle_census",
-    "q217_hourly_autocorrelation",
-    "q207_disjunctive_promo_revenue",
-    "q208_small_quantity_revenue",
-    "q209_waiting_suppliers",
-    "q131c_table_profile_kmv",
-    "q204_zorder_layout_advisor",
-    "q205_retrain_trigger",
-    # (1) changed kernels this round (r12 ADVICE fixes + the q21
-    #     two-phase global-rank rewrite, late-r13)
-    "q103_approx_percentile",
-    "q119_knn_join",
-    "q200_phash_admission",
-    "q203_snapshot_delta",
-    "q21_sort_nulls",
-    # (2) the 29 r8-era keys staged as DRIVER_WINDOW_R13_STAGED
-    "q110b_rrf_topk",
-    "q123_minhash_accuracy",
-    "q128_split_leakage",
-    "q129_dedup_pipeline",
-    "q151_candidate_degree",
-    "q155_lsh_band_sensitivity",
-    "q158b_fuzzy_variants_banded",
-    "q159_dup_authority",
-    "q160_incremental_dedup",
-    "q161_epoch_shuffle",
-    "q162_eval_containment",
-    "q163_srp_banded_pairs",
-    "q164_cluster_safe_split",
-    "q165_hard_negatives",
-    "q166_bpe_train",
-    "q167_ann_recall",
-    "q168_mutual_nn",
-    "q169_bpe_encode",
-    "q170_pack_nextfit",
-    "q171_bootstrap_ci",
-    "q172_novelty_curve",
-    "q173_resample_ffill",
-    "q174_reachability_cte",
-    "q175_frame_dedup",
-    "q176_ann_ranking_quality",
-    "q177_span_quality_prune",
-    "q179_data_card",
-    "q180_rag_context_assembly",
-    "q182_last_touch_attribution",
-    # (3) r9-era fill: audit targets first, then low query numbers
-    "q122_substring_dedup",
-]
-assert len(DRIVER_WINDOW_R13) == 50 and len(set(DRIVER_WINDOW_R13)) == 50
-
-# Staged r14 rotation (CONSUMED by DRIVER_WINDOW below): the 41
-# remaining r9-era keys the r13 window could not fit. Their newest
-# driver evidence is r9, so they hit the 6-round policy ceiling at
-# r15 — running all of them in r14 keeps slack.
-DRIVER_WINDOW_R14_STAGED: list[str] = [
-    "q131_table_profile",  # displaced when q217 entered as a new key (r13 audit row already fresh this round)
-    "q02_filter_predicates",  # displaced when q216 entered as a new key
-    "q14_count_distinct",  # displaced when q215 entered as a new key
-    "q17_global_agg",  # displaced when q214 entered as a new key
-    "q60_range_frame",  # displaced when q213 entered as a new key
-    "q62_asof_join",  # displaced when q212 entered as a new key
-    "q63_window_analytics",  # displaced when q211 entered as a new key
-    "q64_date_format",  # displaced when q210 entered as a new key
-    "q65_grouping_sets",  # displaced when q207 entered as a new key
-    "q66_array_agg",  # displaced when q208 entered as a new key
-    "q67_stats_agg",  # displaced when q209 entered as a new key
-    "q68_shipping_priority",  # displaced when q206 entered as a new key
-    "q69_local_supplier_volume",  # displaced when q21's rewrite jumped the queue
-    "q70_returned_items",  # displaced when q205 entered as a new key
-    "q71_large_volume_customer",  # displaced when q204 entered as a new key
-    "q72_inactive_rich_customers",  # displaced when q131c entered as a new key
-    "q73_cheapest_lineitem_per_part",
-    "q76_merge_upsert",
-    "q77_hash_split",
-    "q79_pii_scrub",
-    "q80_chunk_documents",
-    "q82_higher_order_funcs",
-    "q84_retention",
-    "q85_event_transitions",
-    "q87_lateral_topn",
-    "q89_decontamination",
-    "q91_gopher_rules",
-    "q92_repetition",
-    "q95_tfidf",
-    "q101_winnowing",
-    "q104_incremental_dedup",
-    "q105_vocab_coverage",
-    "q106_udtf_chunks",
-    "q107_variant_json",
-    "q108_cube",
-    "q183_vocab_drift",
-    "q184_index_drift",
-    "q185_pq_adc",
-    "q186_int8_recall",
-    "q187_pq_distortion",
-    "q188_pq_reranked",
-]
-
-# Round-14 window (historical): 47/50 green; the three reds were the
-# never-green q210/q213/q215, root-caused and fixed in r15 (HUGEINT
-# oracle outputs — see oracle.py).
-DRIVER_WINDOW_R14: list[str] = (
-    [
-        # (0) never-green, head of window
-        "q210_supplier_pagerank",
-        "q213_line_boilerplate",
-        "q215_cluster_balanced_sample",
-        # (1) largest r14 plan changes (spread_scan keeps)
-        "q47_simhash",
-        "q61_token_regex",
-        "q112_chunk_dedup",
-        "q120_bpe_pair_counts",
-        "q139_pmi_collocations",
-        "q151b_candidate_volume",
-    ]
-    # (2) the whole r9-era tier, due r15
-    + DRIVER_WINDOW_R14_STAGED
-)
-assert len(DRIVER_WINDOW_R14) == 50 and len(set(DRIVER_WINDOW_R14)) == 50
-
-
-# Staged r15 rotation: the r10-era keys (latest green row r10, policy
-# ceiling r16) not already re-certified by the r14 window above.
-# Changed/new r15 kernels still jump this queue.
-DRIVER_WINDOW_R15_STAGED: list[str] = [
-    "q05_join_inner",
-    "q07_join_left_outer",
-    "q100_scd2",
-    "q102_adaptive_length_filter",
-    "q110_rrf_hybrid",
-    "q111_embedding_quantize",
-    "q113_blocklist_filter",
-    "q114_mixture_weights",
-    "q115_unigram_lm",
-    "q116_containment_dup",
-    "q117_zipf_fit",
-    "q118_canonical_select",
-    "q121_lang_confusion",
-    "q124_reconstruct_chunks",
-    "q126_length_buckets",
-    "q127_centroid_classify",
-    "q12_join_self",
-    "q148_template_mining",
-    "q152_perplexity_buckets",
-    "q152b_perplexity_buckets_scalable",
-    "q181_eval_sample_audit",
-    "q190_opq_rotation",
-    "q192_shard_plan",
-    "q193_mixture_plan",
-    "q31_tumbling_window",
-    "q32_sliding_window",
-    "q33_session_window",
-    "q40_dedup_exact",
-    "q42_quality_score",
-    "q43_cosine_topk",
-    "q44_ngram_jaccard",
-    "q49_multimodal_binary",
-    "q50_cosine_dup_pairs",
-    "q51_lang_id",
-    "q78_normalize_dedup",
-    "q90_curation_pipeline",
-    "q97_quality_audit",
-    "q98_bm25",
-]
-
 # ACTIVE window for this round's driver correctness gate (first 50).
 # r15 rotation. Freshness policy (COVERAGE.md): CHANGED KEYS
 # IMMEDIATELY; UNCHANGED KEYS RE-CERTIFIED WITHIN <=6 ROUNDS.
@@ -749,31 +112,66 @@ DRIVER_WINDOW_R15_STAGED: list[str] = [
 #       are also r11-era evidence hitting the ceiling at r17, so this
 #       retires part of the next due tier early (the r13 "audit
 #       targets first" precedent);
-#   (3) the full 38-key r10-era tier staged last round
-#       (DRIVER_WINDOW_R15_STAGED, verbatim — due r16).
+#   (3) the full 38-key r10-era tier staged last round (verbatim —
+#       due r16).
 # Exactly 50 entries — asserted below, no silent [:50] trim.
-DRIVER_WINDOW: list[str] = (
-    [
-        # (0) ex-never-green: certify the r15 HUGEINT fix
-        "q210_supplier_pagerank",
-        "q213_line_boilerplate",
-        "q215_cluster_balanced_sample",
-        # (1) r15 plan changes
-        "q131_table_profile",
-        "q131c_table_profile_kmv",
-        "q211_volume_shipping",
-        # (2) r15 tail-audit adjudications (q201 is r12-era; the rest
-        #     r11-era, due r17)
-        "q13_tpch_q1",
-        "q125_dsir_sampling",
-        "q131b_table_profile_sketch",
-        "q194_phash_neardup",
-        "q195_ce_rerank",
-        "q201_skew_advisor",
-    ]
+DRIVER_WINDOW: list[str] = [
+    # (0) ex-never-green: certify the r15 HUGEINT fix
+    "q210_supplier_pagerank",
+    "q213_line_boilerplate",
+    "q215_cluster_balanced_sample",
+    # (1) r15 plan changes
+    "q131_table_profile",
+    "q131c_table_profile_kmv",
+    "q211_volume_shipping",
+    # (2) r15 tail-audit adjudications (q201 is r12-era; the rest
+    #     r11-era, due r17)
+    "q13_tpch_q1",
+    "q125_dsir_sampling",
+    "q131b_table_profile_sketch",
+    "q194_phash_neardup",
+    "q195_ce_rerank",
+    "q201_skew_advisor",
     # (3) the whole r10-era tier, due r16
-    + DRIVER_WINDOW_R15_STAGED
-)
+    "q05_join_inner",
+    "q07_join_left_outer",
+    "q100_scd2",
+    "q102_adaptive_length_filter",
+    "q110_rrf_hybrid",
+    "q111_embedding_quantize",
+    "q113_blocklist_filter",
+    "q114_mixture_weights",
+    "q115_unigram_lm",
+    "q116_containment_dup",
+    "q117_zipf_fit",
+    "q118_canonical_select",
+    "q121_lang_confusion",
+    "q124_reconstruct_chunks",
+    "q126_length_buckets",
+    "q127_centroid_classify",
+    "q12_join_self",
+    "q148_template_mining",
+    "q152_perplexity_buckets",
+    "q152b_perplexity_buckets_scalable",
+    "q181_eval_sample_audit",
+    "q190_opq_rotation",
+    "q192_shard_plan",
+    "q193_mixture_plan",
+    "q31_tumbling_window",
+    "q32_sliding_window",
+    "q33_session_window",
+    "q40_dedup_exact",
+    "q42_quality_score",
+    "q43_cosine_topk",
+    "q44_ngram_jaccard",
+    "q49_multimodal_binary",
+    "q50_cosine_dup_pairs",
+    "q51_lang_id",
+    "q78_normalize_dedup",
+    "q90_curation_pipeline",
+    "q97_quality_audit",
+    "q98_bm25",
+]
 assert len(DRIVER_WINDOW) == 50 and len(set(DRIVER_WINDOW)) == 50, (
     "DRIVER_WINDOW must hold exactly 50 unique keys "
     f"(got {len(DRIVER_WINDOW)} entries, {len(set(DRIVER_WINDOW))} unique)"
@@ -859,57 +257,8 @@ def _window_first(items: dict) -> dict:
     return out
 
 
-# Canonical-row dump (VERDICT r14 item 1): the three driver hash-red
-# keys leave a diffable artifact EVERY time the exported query fn is
-# built — including inside the driver's own correctness run, which is
-# the one environment local mirrors cannot reproduce. Outputs are tiny
-# (20/20/128 rows); the collect adds one extra execution of a
-# sub-second plan. SPARK_GRAFT_DUMP_CANON=<dir> widens the dump to any
-# exported query and overrides the destination; SPARK_GRAFT_DUMP_CANON=0
-# disables it outright. Dump failures never fail the query.
-CANON_DUMP_KEYS = frozenset(
-    {
-        "q210_supplier_pagerank",
-        "q213_line_boilerplate",
-        "q215_cluster_balanced_sample",
-    }
-)
-_DEFAULT_CANON_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "canon"
-)
-
-
-def _with_canon_dump(exported: str, fn: QueryFn) -> QueryFn:
-    @functools.wraps(fn)
-    def wrapped(spark, sf_dir):
-        df = fn(spark, sf_dir)
-        env = os.environ.get("SPARK_GRAFT_DUMP_CANON")
-        if env == "0":
-            return df
-        dump_dir = env or (
-            _DEFAULT_CANON_DIR
-            if canonical_name(exported) in CANON_DUMP_KEYS
-            else None
-        )
-        if dump_dir:
-            try:
-                from kinesis_logs_reader_spark.functions.canon import (
-                    dump_canonical_rows,
-                )
-
-                dump_canonical_rows(df, exported, sf_dir, dump_dir)
-            except Exception:
-                pass  # diagnostics must never fail the query itself
-        return df
-
-    return wrapped
-
-
 def export_queries() -> dict[str, QueryFn]:
-    return {
-        k: _with_canon_dump(k, fn)
-        for k, fn in _window_first(all_queries()).items()
-    }
+    return _window_first(all_queries())
 
 
 def export_oracle_sql() -> dict[str, str]:

@@ -124,7 +124,6 @@ def build_session(
     master: str | None = None,
     shuffle_partitions: int = 32,
     extra_conf: dict[str, str] | None = None,
-    driver_memory: str = "16g",
 ) -> SparkSession:
     """Build the engine's SparkSession.
 
@@ -142,8 +141,9 @@ def build_session(
         # heap defaults to 1g — the r7 sf~1 soak OOM'd it (166 queries'
         # session caches + sort buffers on 32 threads). A max-heap cap,
         # not a reservation: only set for explicitly-local sessions;
-        # spark-submit / cluster managers own it otherwise.
-        defaults["spark.driver.memory"] = driver_memory
+        # spark-submit / cluster managers own it otherwise; a caller
+        # on a smaller host lowers it through extra_conf.
+        defaults["spark.driver.memory"] = "16g"
     defaults.update({
         "spark.sql.shuffle.partitions": str(shuffle_partitions),
         "spark.sql.execution.arrow.pyspark.enabled": "true",

@@ -164,10 +164,8 @@ def flow_log_rows(envelopes: DataFrame, typed: bool, mode: str = "strict") -> Da
     return typed_flow_logs(events) if typed else events
 
 
-def decode_envelope(
-    raw: DataFrame, data_col: str = "data", mode: str = "strict", typed: bool = False
-) -> DataFrame:
-    """gzipped-JSON blob column -> one row per log event.
+def decode_envelope(raw: DataFrame, mode: str = "strict", typed: bool = False) -> DataFrame:
+    """gzipped-JSON ``data`` blob column -> one row per log event.
 
     The binary-column parse: the ``gunzip_text`` JVM kernel
     (``gunzip_text_safe`` in permissive mode, where a corrupt gzip or
@@ -176,9 +174,9 @@ def decode_envelope(
     """
     register_kernels(raw.sparkSession)
     gunzip = gunzip_text_safe if mode == "permissive" else gunzip_text
-    envelope = F.from_json(gunzip(F.col(data_col)), envelope_schema(typed))
+    envelope = F.from_json(gunzip(F.col("data")), envelope_schema(typed))
     envelopes = raw.select(envelope.alias("envelope")).select(
-        "envelope.*", F.lit(f"a '{data_col}' record").alias("origin")
+        "envelope.*", F.lit("a 'data' record").alias("origin")
     )
     return flow_log_rows(envelopes, typed, mode)
 

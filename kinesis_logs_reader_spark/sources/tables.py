@@ -37,9 +37,24 @@ TABLE_NAMES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def load_table(
-    spark: SparkSession, sf_dir: str, name: str, *, use_cache: bool = True
-) -> DataFrame:
+def _path_and_key(sf_dir: str, name: str) -> tuple[str, tuple]:
+    """The table's parquet path and its plan-cache key.
+
+    The path's (mtime, size) is part of the key: a table REPLACED
+    mid-session (rebuild, external writer) misses and re-resolves
+    instead of silently serving a stale file index (ADVICE r3). One
+    os.stat per call vs 230-450 ms of re-planning — still ~free.
+    """
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    try:
+        st = os.stat(path)
+        fingerprint = (st.st_mtime_ns, st.st_size)
+    except OSError:
+        fingerprint = None  # nonexistent/remote path: let Spark error out
+    return path, (os.path.abspath(sf_dir), name, fingerprint)
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one table from ``{sf_dir}/{name}.parquet`` as a typed DataFrame.
 
     Resolved DataFrames are cached per session+path — the role a
@@ -47,23 +62,12 @@ def load_table(
     re-lists the directory and re-reads parquet footers driver-side:
     measured 230-450 ms of pure plan-build per query at sf0.1, dwarfing
     execution for small queries. The cache holds only the resolved
-    *plan* (file index + schema); execution always re-scans data, so
-    results stay correct unless files are REPLACED mid-session — writers
-    that rewrite a table they already read must pass ``use_cache=False``.
+    *plan* (file index + schema); execution always re-scans data, and a
+    file replaced mid-session changes the key (``_path_and_key``).
     """
     cache = spark.__dict__.setdefault("_klrs_table_cache", {})
-    # The path's (mtime, size) is part of the key: a table REPLACED
-    # mid-session (rebuild, external writer) misses and re-resolves
-    # instead of silently serving a stale file index (ADVICE r3). One
-    # os.stat per call vs 230-450 ms of re-planning — still ~free.
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        st = os.stat(path)
-        fingerprint = (st.st_mtime_ns, st.st_size)
-    except OSError:
-        fingerprint = None  # nonexistent/remote path: let Spark error out
-    key = (os.path.abspath(sf_dir), name, fingerprint)
-    if use_cache and key in cache:
+    path, key = _path_and_key(sf_dir, name)
+    if key in cache:
         return cache[key]
     configure_runtime(spark)
     df = spark.read.parquet(path)
@@ -75,14 +79,11 @@ def load_table(
         df = df.withColumn(
             "ts", F.expr("cast(timestamp_micros(ts div 1000) as timestamp_ntz)")
         )
-    if use_cache:
-        cache[key] = df
+    cache[key] = df
     return df
 
 
-def load_table_v2(
-    spark: SparkSession, sf_dir: str, name: str, *, use_cache: bool = True
-) -> DataFrame:
+def load_table_v2(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """DataSource-V2 read of one table — for plans that need V2-only
     capabilities, today parquet AGGREGATE pushdown (guide §6): a
     COUNT/MIN/MAX-only aggregate over a V2 scan is answered from
@@ -104,14 +105,8 @@ def load_table_v2(
     aggregate raw columns only.
     """
     cache = spark.__dict__.setdefault("_klrs_table_v2_cache", {})
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        st = os.stat(path)
-        fingerprint = (st.st_mtime_ns, st.st_size)
-    except OSError:
-        fingerprint = None
-    key = (os.path.abspath(sf_dir), name, fingerprint)
-    if use_cache and key in cache:
+    path, key = _path_and_key(sf_dir, name)
+    if key in cache:
         return cache[key]
     configure_runtime(spark)
     conf_key = "spark.sql.sources.useV1SourceList"
@@ -121,16 +116,8 @@ def load_table_v2(
         df = spark.read.parquet(path)
     finally:
         spark.conf.set(conf_key, old)
-    if use_cache:
-        cache[key] = df
+    cache[key] = df
     return df
-
-
-def clear_table_cache(spark: SparkSession) -> None:
-    """Drop every cached table plan (the explicit safety valve for
-    writers that rewrite a directory in place with unchanged stat)."""
-    spark.__dict__.pop("_klrs_table_cache", None)
-    spark.__dict__.pop("_klrs_table_v2_cache", None)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

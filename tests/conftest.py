@@ -23,10 +23,20 @@ from kinesis_logs_reader_spark.session import build_session
 SF_DIR = "/root/testdata/sf0.001"
 SF_DIR_01 = "/root/testdata/sf0.01"
 
+# The suite JVM's heap cap, about 1.5x the peak heap a full run needs:
+# 2.8 GB after collections, measured with GC logging on a 4-vCPU host.
+# build_session's 16g default is more than a 15 GB host shares.
+DRIVER_MEMORY = "4300m"
+
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = build_session(app_name="tests", master="local[8]", shuffle_partitions=8)
+    spark = build_session(
+        app_name="tests",
+        master="local[8]",
+        shuffle_partitions=8,
+        extra_conf={"spark.driver.memory": DRIVER_MEMORY},
+    )
     spark.sparkContext.setLogLevel("ERROR")
     yield spark
     spark.stop()

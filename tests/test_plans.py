@@ -219,38 +219,14 @@ def test_window_family_no_range_exchange(spark):
         assert "rangepartitioning" not in plan, fn.__name__
 
 
-def test_presentation_order_two_mode(spark, monkeypatch):
-    """Scale mode swaps the global sort for a per-partition sort: the
-    rangepartitioning exchange must disappear and the value set must
-    not change."""
-    import os
-
-    from kinesis_logs_reader_spark.plans.output import presentation_order  # noqa: F401
-
-    monkeypatch.delenv("SPARK_GRAFT_SCALE_MODE", raising=False)
-    plan_global = explain.formatted_plan(relational.q01_project_arith(spark, SF_DIR))
-    assert "rangepartitioning" in plan_global
-    monkeypatch.setenv("SPARK_GRAFT_SCALE_MODE", "1")
-    df_scale = relational.q01_project_arith(spark, SF_DIR)
-    plan_scale = explain.formatted_plan(df_scale)
-    assert "rangepartitioning" not in plan_scale
-    assert "Exchange" not in plan_scale  # map-only: zero exchanges
-
-
-def test_two_mode_values_identical(spark, monkeypatch):
-    """The two-mode contract's core invariant: global ORDER BY and
-    scale-mode SORT BY differ only in row layout, never in values."""
-    for fn in (
-        relational.q04_cast_coalesce,
-        relational.q26c_math_funcs,
-        relational.q58_map_funcs,
-        relational.q64_date_format,
-    ):
-        monkeypatch.delenv("SPARK_GRAFT_SCALE_MODE", raising=False)
-        a = sorted(tuple(r) for r in fn(spark, SF_DIR).collect())
-        monkeypatch.setenv("SPARK_GRAFT_SCALE_MODE", "1")
-        b = sorted(tuple(r) for r in fn(spark, SF_DIR).collect())
-        assert a == b, fn.__name__
+def test_presentation_sort_is_one_range_exchange(spark):
+    """Every query has one output order: q01's presentation ORDER BY is
+    a global sort, so its otherwise map-only plan holds exactly one
+    exchange, and that exchange is the range partitioning."""
+    df = relational.q01_project_arith(spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1
+    assert plan.count("rangepartitioning") == 1
 
 
 # --- round-4 batch (q110-q116) scale-posture pins --------------------------

@@ -9,14 +9,11 @@ HUGEINT to float64, arrow to decimal128) hashes differently from
 Spark's int64 even though the fetchall values are equal. Local parity
 compares python ints, so it could never reproduce the divergence.
 
-These tests pin the fix (BIGINT casts in the three oracles), the
-suite-wide convention (no int128 oracle output anywhere), and the
-canonical-row dump the export path now leaves for the three keys.
+These tests pin the fix (BIGINT casts in the three oracles) and the
+suite-wide convention (no int128 oracle output anywhere).
 """
 
 from __future__ import annotations
-
-import os
 
 import duckdb
 import pytest
@@ -88,38 +85,3 @@ def test_red_trio_typed_results_match_spark_int64(con, spark):
             [d[0] for d in rel.description], drows
         ), name
 
-
-def test_canon_dump_writes_artifact(spark, tmp_path):
-    """SPARK_GRAFT_DUMP_CANON=<dir> makes the exported query fn leave a
-    canonical-row artifact; the fn's result is unchanged."""
-    os.environ["SPARK_GRAFT_DUMP_CANON"] = str(tmp_path)
-    try:
-        q = registry.export_queries()
-        key = registry.export_name("q210_supplier_pagerank")
-        df = q[key](spark, SF_DIR)
-        n = df.count()
-    finally:
-        del os.environ["SPARK_GRAFT_DUMP_CANON"]
-    files = list(tmp_path.iterdir())
-    assert len(files) == 1 and files[0].name.startswith(key)
-    text = files[0].read_text()
-    assert f"# n_rows: {n}" in text
-    assert "# hash: " in text
-
-
-def test_canon_dump_failure_never_fails_query(spark, monkeypatch):
-    """A dump failure (unwritable dir) must not propagate."""
-    monkeypatch.setenv("SPARK_GRAFT_DUMP_CANON", "/proc/nonexistent/nope")
-    q = registry.export_queries()
-    key = registry.export_name("q213_line_boilerplate")
-    assert q[key](spark, SF_DIR).count() > 0
-
-
-def test_canon_dump_disabled_by_zero(spark, monkeypatch, tmp_path):
-    """SPARK_GRAFT_DUMP_CANON=0 disables even the default red-trio dump."""
-    monkeypatch.setenv("SPARK_GRAFT_DUMP_CANON", "0")
-    monkeypatch.setattr(registry, "_DEFAULT_CANON_DIR", str(tmp_path))
-    q = registry.export_queries()
-    key = registry.export_name("q215_cluster_balanced_sample")
-    assert q[key](spark, SF_DIR).count() > 0
-    assert list(tmp_path.iterdir()) == []

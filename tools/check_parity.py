@@ -24,8 +24,8 @@ from kinesis_logs_reader_spark.oracle import TABLES
 
 SF_DIR = "/root/testdata/sf0.01"
 
-# canon_cell / table_hash live in functions/canon.py, shared with the
-# in-driver canonical-row dump so the two can never diverge (r15).
+# canon_cell / table_hash live in functions/canon.py, shared with
+# tests/test_queries.py so the two gates can never canonicalize apart.
 
 
 def main() -> int:

@@ -4,7 +4,9 @@ declared surface, and measure its replan-time delta, in ONE session.
 For each registry query the probe re-plans the same logical plan twice
 — once with the session's baseline conf, once with the candidate conf
 applied via spark.conf.set — interleaved A/B/A/B so JIT warmth and VM
-weather cancel. Plans are canonicalized (expression IDs stripped;
+weather cancel. Sessions use bench.py's profile, and every query keeps
+its one output order (a final presentation ORDER BY is the global sort
+the parity gate checks). Plans are canonicalized (expression IDs stripped;
 spark.sql.debug.maxToStringFields / maxMetadataStringLength raised so
 toString never truncates mid-token; ``plans.explain.canonical_plan``)
 and compared per query. tests/test_queries.py holds the session's own
@@ -30,7 +32,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-os.environ.setdefault("SPARK_GRAFT_SCALE_MODE", "1")
 
 BENCH_PROFILE = {
     "spark.shuffle.compress": "false",
