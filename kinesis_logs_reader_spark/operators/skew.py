@@ -21,7 +21,7 @@ salting is the answer when the same value is hot.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -60,13 +60,6 @@ def salted_agg(
             raise ValueError(f"non-algebraic aggregate cannot be salted: {fn}")
     partial = df.withColumn("_salt", salt).groupBy(key, "_salt").agg(*phase1_exprs)
     return partial.groupBy(key).agg(*phase2_exprs)
-
-
-def repartition_for_join(df: DataFrame, key: str | Column, n: int) -> DataFrame:
-    """Pre-shuffle on the join key so repeated joins against the same
-    key reuse one exchange (Catalyst reuses compatible output
-    partitioning across stages)."""
-    return df.repartition(n, key)
 
 
 def salted_join(

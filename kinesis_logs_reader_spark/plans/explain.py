@@ -20,10 +20,6 @@ def formatted_plan(df: DataFrame) -> str:
     )
 
 
-def plan_has(df: DataFrame, needle: str) -> bool:
-    return needle in formatted_plan(df)
-
-
 def count_exchanges(df: DataFrame) -> int:
     """Number of shuffle exchanges in the physical plan."""
     return formatted_plan(df).count("Exchange hashpartitioning") + formatted_plan(

@@ -34,8 +34,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def _path_and_key(sf_dir: str, name: str) -> tuple[str, tuple]:
     """The table's parquet path and its plan-cache key.

@@ -12,11 +12,13 @@ Watermarks bound state: at 100 TB/day the window state store would
 otherwise grow without limit; every windowed job here declares one.
 
 Sinks that keep external state are ``apply_*_batch(batch_df, batch_id,
-...)`` functions, all run by the one :func:`run_batch_sink`.
+...)`` functions, all run by the one :func:`run_batch_sink`, and they
+keep that state in :class:`EpochStore` ledgers only.
 """
 
 from __future__ import annotations
 
+import os
 from functools import partial
 from typing import Callable
 
@@ -174,9 +176,10 @@ def run_batch_sink(
     reference's drain-until-caught-up loop) calling
     ``apply_fn(batch_df, batch_id)`` per micro-batch; returns the
     started query. Sinks pass an ``apply_*_batch`` function with its
-    stores bound by ``functools.partial``. Each writes per-batch-id
-    directories with overwrite, so replaying a failed epoch rewrites
-    the same directories (exactly-once per epoch).
+    stores bound by ``functools.partial``. Each keeps its state in
+    :class:`EpochStore` ledgers, so replaying a failed epoch rewrites
+    the same partitions (exactly-once per epoch), and a store that
+    belongs to another checkpoint's query fails the run.
     """
     return (
         stream.writeStream.foreachBatch(apply_fn)
@@ -299,8 +302,6 @@ def _store_has_batches(d: str) -> bool:
     (crashed write before any part file landed) is skipped so the
     subsequent ``spark.read.parquet`` never sees a schema-less store.
     """
-    import os
-
     if not os.path.isdir(d):
         return False
     with os.scandir(d) as top:
@@ -313,47 +314,87 @@ def _store_has_batches(d: str) -> bool:
     return False
 
 
+class EpochStore:
+    """One ``batch_id=<id>``-partitioned parquet ledger of a
+    foreachBatch sink: the idempotent half of the exactly-once pair
+    (replayable source + epoch-keyed sink, *Structured Streaming*).
+
+    Replay contract, for every ``apply_*_batch`` sink: a micro-batch
+    reads only the epochs before its own (:meth:`prior`) and overwrites
+    only its own partition (:meth:`put`). A replay of epoch N — after a
+    crash that landed some of its writes but not the checkpoint commit —
+    therefore derives the same inputs and rewrites the same partitions,
+    never seeing its own half-done writes. Partition pruning makes the
+    ``batch_id < N`` filter a directory skip, not a scan.
+
+    That holds only while the store lives as long as one checkpoint: a
+    fresh checkpoint restarts batch ids at 0, so its epoch 0 would read
+    no history and overwrite the old run's epoch 0. The store therefore
+    belongs to one streaming query. Its first streamed use records the
+    query id (kept in the checkpoint, so stable across restarts) in a
+    ``_query_id`` file, which Spark's file listing skips, and any other
+    query raises before reading or writing. A direct call outside a
+    stream carries no query id and is not checked.
+    """
+
+    def __init__(self, d: str):
+        self.dir = d
+
+    def _check_owner(self, spark) -> None:
+        qid = spark.sparkContext.getLocalProperty("sql.streaming.queryId")
+        if qid is None:
+            return
+        marker = os.path.join(self.dir, "_query_id")
+        if not os.path.exists(marker):
+            os.makedirs(self.dir, exist_ok=True)
+            with open(marker, "w") as fh:
+                fh.write(qid)
+            return
+        with open(marker) as fh:
+            owner = fh.read()
+        if owner != qid:
+            raise RuntimeError(
+                f"epoch store {self.dir} belongs to streaming query {owner},"
+                f" not to query {qid}: a store cannot outlive its checkpoint"
+            )
+
+    def prior(self, spark, batch_id: int, empty_schema: str) -> DataFrame:
+        """The epochs before ``batch_id``, with their ``batch_id``
+        column; a missing store or one with no written partition is no
+        history (``empty_schema`` gives its data columns)."""
+        self._check_owner(spark)
+        if not _store_has_batches(self.dir):
+            return spark.createDataFrame([], f"{empty_schema}, batch_id int")
+        return spark.read.parquet(self.dir).filter(F.col("batch_id") < batch_id)
+
+    def put(self, df: DataFrame, batch_id: int) -> None:
+        """Overwrite epoch ``batch_id`` with ``df``."""
+        self._check_owner(df.sparkSession)
+        df.write.mode("overwrite").parquet(
+            os.path.join(self.dir, f"batch_id={batch_id}")
+        )
+
+
 def apply_incremental_dedup_batch(
     batch_df: DataFrame, batch_id: int, store_dir: str, out_dir: str
 ) -> None:
     """One micro-batch of continuous corpus growth with cross-batch
     dedup: admit documents whose canonical-text digest is unseen in the
     digest store (and unique within the batch), append them to
-    ``out_dir`` and their digests to ``store_dir``.
+    ``out_dir`` and their digests to ``store_dir`` (both
+    :class:`EpochStore` ledgers).
 
     foreachBatch because the dedup joins against mutable external state:
     watermarked ``dropDuplicates`` only dedups inside its retention
-    horizon, while the store is unbounded history at ~16 bytes/doc.
-    Both writes land in a ``batch_id=<id>`` partition with overwrite,
-    so calling this twice with the same batch_id leaves the corpus and
-    digest store unchanged."""
-    import os
-
+    horizon, while the store is unbounded history at ~16 bytes/doc."""
     from kinesis_logs_reader_spark.operators.preprocess import dedup_incremental
 
-    spark = batch_df.sparkSession
-    if _store_has_batches(store_dir):
-        # Exclude THIS batch's own partition: on a replay where both
-        # writes landed but the checkpoint commit didn't, the store
-        # already holds this batch's digests — consulting them would
-        # compute an empty admitted set and overwrite the corpus
-        # partition with nothing. Partition pruning makes the filter
-        # a directory skip, not a scan.
-        known = spark.read.parquet(store_dir)
-        if "batch_id" in known.columns:
-            known = known.filter(F.col("batch_id") != batch_id)
-        known = known.select("_h")
-    else:
-        known = spark.createDataFrame([], "_h string")
-    kept = dedup_incremental(batch_df, known)
-    kept.persist()
+    store, out = EpochStore(store_dir), EpochStore(out_dir)
+    known = store.prior(batch_df.sparkSession, batch_id, "_h string")
+    kept = dedup_incremental(batch_df, known.select("_h")).persist()
     try:
-        kept.drop("_h").write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_id={batch_id}")
-        )
-        kept.select("_h").write.mode("overwrite").parquet(
-            os.path.join(store_dir, f"batch_id={batch_id}")
-        )
+        out.put(kept.drop("_h"), batch_id)
+        store.put(kept.select("_h"), batch_id)
     finally:
         kept.unpersist()
 
@@ -365,34 +406,22 @@ def apply_admission_batch(
     streaming twin of ``dedup.q160_incremental_dedup``): verdict each
     incoming doc against the cumulative signature STORE (content md5 +
     LSH band digests of everything admitted so far), admit the novel
-    ones, and append their signatures.
-
-    Same replay-idempotence discipline as
-    :func:`apply_incremental_dedup_batch`: both writes land in a
-    ``batch_id=<id>`` partition with overwrite, and the store read
-    excludes this batch's own partition so a checkpoint replay
-    recomputes identical verdicts instead of seeing its own half-done
-    writes. foreachBatch because the state is an unbounded external
-    digest store (~80 bytes/doc), not a watermark-boundable
-    aggregation; each batch pays O(batch) signing plus digest-keyed
-    joins (SCALE.md: warm cost scale-flat on 10x corpus).
+    ones, and append their signatures. Verdicts and signatures are
+    :class:`EpochStore` ledgers. foreachBatch because the state is an
+    unbounded external digest store (~80 bytes/doc), not a
+    watermark-boundable aggregation; each batch pays O(batch) signing
+    plus digest-keyed joins (SCALE.md: warm cost scale-flat on 10x
+    corpus).
     """
-    import os
-
     from kinesis_logs_reader_spark.operators.dedup import (
         _doc_band_rows,
         admission_verdicts,
     )
 
-    spark = batch_df.sparkSession
-    if _store_has_batches(store_dir):
-        known = spark.read.parquet(store_dir)
-        if "batch_id" in known.columns:
-            known = known.filter(F.col("batch_id") != batch_id)
-        known = known.select("band_idx", "digest")
-    else:
-        known = spark.createDataFrame([], "band_idx int, digest string")
-
+    store, out = EpochStore(store_dir), EpochStore(out_dir)
+    known = store.prior(
+        batch_df.sparkSession, batch_id, "band_idx int, digest string"
+    ).select("band_idx", "digest")
     verdicted = admission_verdicts(
         batch_df.select("doc_id", "text"),
         known_content=known.filter(F.col("band_idx") == -1).select("digest"),
@@ -401,9 +430,7 @@ def apply_admission_batch(
         near_label="near_store",
     ).persist()
     try:
-        verdicted.select("doc_id", "verdict").write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_id={batch_id}")
-        )
+        out.put(verdicted.select("doc_id", "verdict"), batch_id)
         admitted = verdicted.filter(F.col("verdict") == "novel").select(
             "doc_id", "text"
         )
@@ -412,9 +439,7 @@ def apply_admission_batch(
             F.lit(-1).cast("int").alias("band_idx"),
             F.md5("text").alias("digest"),
         ).unionByName(_doc_band_rows(admitted))
-        sig_rows.write.mode("overwrite").parquet(
-            os.path.join(store_dir, f"batch_id={batch_id}")
-        )
+        store.put(sig_rows, batch_id)
     finally:
         verdicted.unpersist()
 
@@ -435,7 +460,6 @@ def build_ivf_codebook(spark, sf_dir: str, codebook_dir: str) -> None:
     cells on different days. (cell, dim, mu) is |cells| x dim rows —
     KBs — so every batch broadcasts it.
     """
-    import os
     import uuid
 
     from kinesis_logs_reader_spark.operators.dedup import _atomic_promote
@@ -473,13 +497,9 @@ def apply_ann_index_batch(
     """One micro-batch of the streaming ANN-index update: route each
     incoming (vec_id, embedding) to its argmin cell against the FROZEN
     broadcast codebook — exact int64 arithmetic, the q141 routing — and
-    append (vec_id, cell, d2) to the cell-assignment store.
-
-    Replay idempotence (the q160/admission discipline): the write lands
-    in a ``batch_id=<id>`` partition with overwrite, so a checkpoint
-    replay overwrites its own rows with identical values instead of
-    duplicating them. Scale shape: per batch the work is one broadcast
-    join against a KB codebook + a batch-bounded aggregate; the
+    append (vec_id, cell, d2) to the cell-assignment
+    :class:`EpochStore`. Scale shape: per batch the work is one
+    broadcast join against a KB codebook + a batch-bounded aggregate; the
     admitted index NEVER re-routes — each batch pays O(batch x cells x
     dim), the incremental contract an index-maintenance job needs at
     100 TB (a full rebuild pays O(corpus) once; this pays O(day's
@@ -487,12 +507,7 @@ def apply_ann_index_batch(
     external assignment store keyed for probe joins, not a
     watermark-boundable aggregation.
     """
-    import os
-
-    from pyspark.sql.window import Window
-
-    spark = batch_df.sparkSession
-    cent = spark.read.parquet(codebook_dir)
+    cent = batch_df.sparkSession.read.parquet(codebook_dir)
     flat = batch_df.select(
         "vec_id", F.posexplode("embedding").alias("dim", "v")
     ).select(
@@ -517,9 +532,7 @@ def apply_ann_index_batch(
         .filter(F.col("rn") == 1)
         .select("vec_id", "cell", "d2")
     )
-    assigned.write.mode("overwrite").parquet(
-        os.path.join(store_dir, f"batch_id={batch_id}")
-    )
+    EpochStore(store_dir).put(assigned, batch_id)
 
 
 # --- r9: streaming PQ-encode maintenance (the q185 family's sink) -----------
@@ -534,7 +547,6 @@ def build_pq_codebooks_frozen(spark, sf_dir: str, books_dir: str) -> None:
     frozen copy exists so every future batch — across restarts and
     machines — encodes against bit-identical centroids, the same
     frozen-artifact contract as build_ivf_codebook."""
-    import os
     import uuid
 
     from kinesis_logs_reader_spark.operators.dedup import _atomic_promote
@@ -571,19 +583,14 @@ def apply_pq_encode_batch(
     join on dim (each row meets only its own subspace's K centroids)
     -> partial-agg distances -> per-(vec, sub) argmin window. Exact
     int64 arithmetic, so streaming codes are bitwise equal to the
-    batch pq_encode Arrow pass (pinned in tests). Replay idempotence:
-    batch_id-partitioned overwrite, the q160 discipline. Per batch the
-    work is O(batch x K x dim) with only (vec, sub, code) rows
-    shuffling — the store grows by M small ints per vector, which is
-    the point of PQ at 100 TB. foreachBatch because the state is an
-    unbounded external code store that ADC probes join against.
+    batch pq_encode Arrow pass (pinned in tests). The code store is an
+    :class:`EpochStore`. Per batch the work is O(batch x K x dim) with
+    only (vec, sub, code) rows shuffling — the store grows by M small
+    ints per vector, which is the point of PQ at 100 TB. foreachBatch
+    because the state is an unbounded external code store that ADC
+    probes join against.
     """
-    import os
-
-    from pyspark.sql.window import Window
-
-    spark = batch_df.sparkSession
-    books = spark.read.parquet(books_dir)
+    books = batch_df.sparkSession.read.parquet(books_dir)
     flat = batch_df.select(
         "vec_id", F.posexplode("embedding").alias("dim", "v")
     ).select(
@@ -608,9 +615,7 @@ def apply_pq_encode_batch(
         .filter(F.col("rn") == 1)
         .select("vec_id", "sub", "code", "d2")
     )
-    encoded.write.mode("overwrite").parquet(
-        os.path.join(store_dir, f"batch_id={batch_id}")
-    )
+    EpochStore(store_dir).put(encoded, batch_id)
 
 
 def apply_shard_plan_batch(
@@ -626,12 +631,13 @@ def apply_shard_plan_batch(
     q160/q185-sink discipline applied to the shard planner.
 
     Offset high-water mark WITHOUT a mutable counter: each batch also
-    writes a one-row per-batch token total under ``totals/``; the
-    current batch's base offset is the sum of totals with batch_id <
-    this one — recomputed from immutable partitions, so a REPLAYED
-    batch derives the identical base and overwrites its own partition
-    byte-for-byte (idempotence, pinned). Reading the totals store is
-    one row per prior batch, never per document.
+    writes a one-row per-batch token total to the ``totals/``
+    :class:`EpochStore`, next to its assignments under ``docs/``; the
+    current batch's base offset is the sum of the prior epochs' totals,
+    recomputed from immutable partitions. Reading the totals store is
+    one row per prior batch, never per document, and a totals ledger
+    that exists but cannot be read fails loud instead of resetting the
+    offset to 0.
 
     Ordering contract: documents shard in ARRIVAL order (batch by
     batch; md5-key order within a batch — q192's key). When the whole
@@ -644,29 +650,14 @@ def apply_shard_plan_batch(
     because the state is an unbounded external assignment store plus
     the totals ledger, not a watermark-boundable aggregation.
     """
-    import os
-
-    from pyspark.sql.window import Window
-
-    from pyspark.errors import AnalysisException
-
     spark = batch_df.sparkSession
-    totals_dir = os.path.join(store_dir, "totals")
-    # hwm=0 is legitimate ONLY when the totals ledger has never been
-    # written (path-not-found). Any other failure on an EXISTING ledger
-    # (corrupt file, IO/permission error) must propagate loudly —
-    # treating it as "first batch" would silently reset the global
-    # offset and produce shard offsets overlapping earlier batches.
-    try:
-        prev = spark.read.parquet(totals_dir).filter(
-            F.col("batch_id") < batch_id
-        )
-        row = prev.agg(F.sum("n_tokens").alias("t")).first()
-        hwm = int(row["t"]) if row and row["t"] is not None else 0
-    except AnalysisException as exc:
-        if "PATH_NOT_FOUND" not in (exc.getCondition() or str(exc)):
-            raise
-        hwm = 0  # totals ledger absent: genuinely the first batch
+    docs = EpochStore(os.path.join(store_dir, "docs"))
+    totals = EpochStore(os.path.join(store_dir, "totals"))
+    hwm = (
+        totals.prior(spark, batch_id, "n_docs long, n_tokens long")
+        .agg(F.coalesce(F.sum("n_tokens"), F.lit(0)))
+        .first()[0]
+    )
     staged = batch_df.select(
         "doc_id",
         F.size(F.split("text", " ")).cast("long").alias("nt"),
@@ -686,18 +677,17 @@ def apply_shard_plan_batch(
             "shard_id", F.expr(f"cum_before div {budget}").cast("bigint")
         )
     )
-    assigned.write.mode("overwrite").parquet(
-        os.path.join(store_dir, f"docs/batch_id={batch_id}")
-    )
+    docs.put(assigned, batch_id)
     tot = assigned.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.coalesce(F.sum("nt"), F.lit(0)).alias("n_tokens"),
     ).first()
-    spark.createDataFrame(
-        [(int(tot["n_docs"]), int(tot["n_tokens"]))],
-        "n_docs long, n_tokens long",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(totals_dir, f"batch_id={batch_id}")
+    totals.put(
+        spark.createDataFrame(
+            [(int(tot["n_docs"]), int(tot["n_tokens"]))],
+            "n_docs long, n_tokens long",
+        ).coalesce(1),
+        batch_id,
     )
 
 
@@ -712,14 +702,15 @@ def apply_mixture_sample_batch(
     the q192/q160 sink discipline applied to the draw itself
     (VERDICT r10 item 8).
 
-    State is two immutable per-batch ledgers, never a mutable store:
+    State is two immutable per-batch :class:`EpochStore` ledgers, never
+    a mutable store:
 
-    - ``counts/batch_id=N``: per-source arrival counts for batch N.
+    - ``counts/``: per-source arrival counts for each batch.
       Cumulative source sizes (the Hamilton weight input) are a sum
       over ledger rows — one row per (source, batch), never per doc.
-    - ``cands/batch_id=N``: the per-source ``budget``-smallest
+    - ``cands/``: the per-source ``budget``-smallest
       (md5 key, doc_id) candidates over EVERYTHING arrived through
-      batch N, derived from the latest prior candidate set plus this
+      the batch, derived from the latest prior candidate set plus this
       batch's arrivals. Because any source's quota is at most
       ``budget`` (quotas sum to it), this bounded frame — at most
       |sources| x budget rows regardless of corpus size — is a
@@ -728,71 +719,49 @@ def apply_mixture_sample_batch(
 
     Per batch the sink re-apportions quotas from cumulative counts
     (largest-remainder, q193's arithmetic verbatim), draws from the
-    candidate frame, and writes the full |sources|-row plan under
-    ``plans/batch_id=N``. A REPLAYED batch reads only ledgers with
-    batch_id < its own and overwrites its own partitions
-    byte-for-byte (idempotence, pinned). Corrupt/unreadable ledgers
-    fail LOUD; only path-not-found means "first batch" (the
-    apply_shard_plan_batch contract). foreachBatch because the state is
-    the bounded external candidate/count ledgers, not a
-    watermark-boundable aggregation.
+    candidate frame, and writes the full |sources|-row plan to the
+    ``plans/`` ledger. Corrupt/unreadable ledgers fail LOUD.
+    foreachBatch because the state is the bounded external
+    candidate/count ledgers, not a watermark-boundable aggregation.
     """
-    import os
-
-    from pyspark.errors import AnalysisException
-    from pyspark.sql.window import Window
-
     spark = batch_df.sparkSession
-
-    def _ledger(subdir: str, empty_schema: str) -> DataFrame:
-        path = os.path.join(store_dir, subdir)
-        try:
-            return spark.read.parquet(path).filter(
-                F.col("batch_id") < batch_id
-            )
-        except AnalysisException as exc:
-            if "PATH_NOT_FOUND" not in (exc.getCondition() or str(exc)):
-                raise
-            return spark.createDataFrame([], empty_schema)
-
+    cands_store, counts_store, plans_store = (
+        EpochStore(os.path.join(store_dir, sub))
+        for sub in ("cands", "counts", "plans")
+    )
     arrivals = batch_df.select(
         "doc_id",
         "source",
         F.md5(F.col("doc_id").cast("string")).alias("k"),
     )
 
-    # candidate frame: latest prior set (bounded) + this batch's docs,
-    # per-source budget-smallest by (md5 key, doc_id)
-    prev_cands = _ledger(
-        "cands", "source string, doc_id long, k string, batch_id long"
+    prev_cands = cands_store.prior(
+        spark, batch_id, "source string, doc_id long, k string"
     )
-    latest_row = prev_cands.agg(F.max("batch_id").alias("m")).first()
-    latest_id = latest_row["m"] if latest_row else None
-    latest = (
-        prev_cands.filter(F.col("batch_id") == latest_id)
-        if latest_id is not None
-        else prev_cands
-    ).select("source", "doc_id", "k")
+    prev_counts = (
+        counts_store.prior(spark, batch_id, "source string, n long")
+        .groupBy("source")
+        .agg(F.sum("n").alias("n_prev"))
+    )
+
+    # candidate frame: latest prior set (bounded) + this batch's docs,
+    # per-source budget-smallest by (md5 key, doc_id); no prior set on
+    # the first epoch, where latest_id is None and matches no row
+    latest_id = prev_cands.agg(F.max("batch_id")).first()[0]
+    latest = prev_cands.filter(F.col("batch_id") == latest_id).select(
+        "source", "doc_id", "k"
+    )
     w_cand = Window.partitionBy("source").orderBy("k", "doc_id")
     cands = (
         latest.unionByName(arrivals.select("source", "doc_id", "k"))
         .withColumn("rnk", F.row_number().over(w_cand))
         .filter(F.col("rnk") <= budget)
     )
-    cands.drop("rnk").write.mode("overwrite").parquet(
-        os.path.join(store_dir, f"cands/batch_id={batch_id}")
-    )
+    cands_store.put(cands.drop("rnk"), batch_id)
 
     # counts ledger + cumulative source sizes through this batch
     own = arrivals.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
-    own.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(store_dir, f"counts/batch_id={batch_id}")
-    )
-    prev_counts = (
-        _ledger("counts", "source string, n long, batch_id long")
-        .groupBy("source")
-        .agg(F.sum("n").alias("n_prev"))
-    )
+    counts_store.put(own.coalesce(1), batch_id)
     cum = (
         own.join(prev_counts, "source", "full_outer")
         .select(
@@ -849,9 +818,7 @@ def apply_mixture_sample_batch(
         ),
         F.coalesce(F.col("draw_checksum"), F.lit(0)).alias("draw_checksum"),
     )
-    plan.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(store_dir, f"plans/batch_id={batch_id}")
-    )
+    plans_store.put(plan.coalesce(1), batch_id)
 
 
 # --- streaming image admission (r12, VERDICT r11 item 8a) -------------------
@@ -871,50 +838,36 @@ def apply_phash_admission_batch(
     Store rows: (doc_id, band_idx, digest) in the
     ``phash_digest_rows`` namespaces (band_idx -1 = packed "x:<sig64>"
     signature, 0..3 = "<i>:<band>"), the same schema the persisted
-    batch index uses. Same replay-idempotence discipline as
-    :func:`apply_admission_batch`: both writes land in a
-    ``batch_id=<id>`` partition with overwrite, and the store read
-    excludes this batch's own partition. foreachBatch because the state
-    is an unbounded external signature store (~40 bytes/image), not a
-    watermark-boundable aggregation.
+    batch index uses. Verdicts and signatures are :class:`EpochStore`
+    ledgers. foreachBatch because the state is an unbounded external
+    signature store (~40 bytes/image), not a watermark-boundable
+    aggregation.
     """
-    import os
-
     from kinesis_logs_reader_spark.operators.multimodal import (
         perceptual_hashes,
         phash_admission_verdicts,
         phash_digest_rows,
     )
 
-    spark = batch_df.sparkSession
-
-    if _store_has_batches(store_dir):
-        known = spark.read.parquet(store_dir)
-        if "batch_id" in known.columns:
-            known = known.filter(F.col("batch_id") != batch_id)
-        known = known.select("digest")
-    else:
-        known = spark.createDataFrame([], "digest string")
-
+    store, out = EpochStore(store_dir), EpochStore(out_dir)
+    known = store.prior(batch_df.sparkSession, batch_id, "digest string")
     sigs = perceptual_hashes(
         batch_df.select(
             "doc_id", F.col("text").cast("binary").alias("payload")
         )
     ).persist()
     try:
-        verdicted = phash_admission_verdicts(sigs, known).persist()
-        verdicted.select("doc_id", "verdict").write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_id={batch_id}")
-        )
-        admitted = sigs.join(
-            verdicted.filter(F.col("verdict") == "novel").select("doc_id"),
-            "doc_id",
-            "left_semi",
-        )
-        phash_digest_rows(admitted).write.mode("overwrite").parquet(
-            os.path.join(store_dir, f"batch_id={batch_id}")
-        )
-        verdicted.unpersist()
+        verdicted = phash_admission_verdicts(sigs, known.select("digest")).persist()
+        try:
+            out.put(verdicted.select("doc_id", "verdict"), batch_id)
+            admitted = sigs.join(
+                verdicted.filter(F.col("verdict") == "novel").select("doc_id"),
+                "doc_id",
+                "left_semi",
+            )
+            store.put(phash_digest_rows(admitted), batch_id)
+        finally:
+            verdicted.unpersist()
     finally:
         sigs.unpersist()
 
@@ -938,26 +891,21 @@ def apply_retrain_monitor_batch(
     are the q205 module constants, so the batch and streaming
     verdicts can't drift apart.
 
-    Store rows: (key, source, dig, lb, batch_id) in ``batch_id=<id>``
-    hive partitions with per-partition overwrite — the established
-    replay-idempotence discipline (a checkpoint replay overwrites the
-    same partitions; the store read excludes this batch's own
-    partition, and a re-keyed document takes its LATEST store row by
-    max batch_id). Per batch the store is scanned once for the join
+    Store rows: (key, source, dig, lb) in an :class:`EpochStore`, as
+    are the verdicts; a re-keyed document takes its LATEST store row by
+    max batch_id. Per batch the store is scanned once for the join
     and once for the histogram — the same O(store-scan) contract as
     the other admission sinks; at scale both sides are digest/
     source-bucketed side tables. foreachBatch because the baseline is
     an unbounded external snapshot store (digest + one histogram bucket
     per doc), not a watermark-boundable aggregation.
     """
-    import os
-
     from kinesis_logs_reader_spark.operators.dedup import (
         _RETRAIN_CHURN_PPM,
         _RETRAIN_DRIFT_PPM,
     )
 
-    spark = batch_df.sparkSession
+    snapshots, out = EpochStore(store_dir), EpochStore(out_dir)
     batch = batch_df.select(
         F.col("doc_id").alias("key"),
         "source",
@@ -969,14 +917,11 @@ def apply_retrain_monitor_batch(
         .cast("int")
         .alias("lb"),
     )
-    if _store_has_batches(store_dir):
-        store = spark.read.parquet(store_dir)
-        if "batch_id" in store.columns:
-            store = store.filter(F.col("batch_id") != batch_id)
-    else:
-        store = spark.createDataFrame(
-            [], "key long, source string, dig string, lb int, batch_id long"
-        )
+    store = snapshots.prior(
+        batch_df.sparkSession,
+        batch_id,
+        "key long, source string, dig string, lb int",
+    )
 
     # churn: batch keys vs the store's LATEST row per key (a re-keyed
     # doc must compare against its newest admitted digest)
@@ -1072,12 +1017,8 @@ def apply_retrain_monitor_batch(
             .alias("trigger"),
         )
     )
-    verdicts.write.mode("overwrite").parquet(
-        os.path.join(out_dir, f"batch_id={batch_id}")
-    )
-    batch.write.mode("overwrite").parquet(
-        os.path.join(store_dir, f"batch_id={batch_id}")
-    )
+    out.put(verdicts, batch_id)
+    snapshots.put(batch, batch_id)
 
 
 def apply_pagerank_refresh_batch(
@@ -1097,11 +1038,10 @@ def apply_pagerank_refresh_batch(
     (customer, supplier) pair per batch, never raw events), because
     damped PageRank has no exact bounded-state decomposition over an
     append stream. What IS incremental is the store fold: the batch
-    aggregates map-side to its own (c, s, w) rows and lands in a
-    ``batch_id=<id>`` partition with per-partition overwrite — the
-    established replay-idempotence discipline (a checkpoint replay
-    overwrites the same partition bit-for-bit, so store AND emitted
-    ranks are identical on re-apply; pinned in test_streaming).
+    aggregates map-side to its own (c, s, w) rows in an
+    :class:`EpochStore`, and the ranks use the prior epochs plus this
+    batch's own rows (ranks reflect post-ingest state), so store AND
+    emitted ranks are identical on re-apply (pinned in test_streaming).
 
     foreachBatch because the rank is a whole-graph fixpoint over an
     unbounded external edge store.
@@ -1113,10 +1053,8 @@ def apply_pagerank_refresh_batch(
         pagerank_supplier_ranks,
     )
 
-    import os
-
-    spark = batch_df.sparkSession
-    # Store write carries batch_id ONLY as the hive partition directory
+    edges, out = EpochStore(store_dir), EpochStore(out_dir)
+    # Store rows carry batch_id ONLY as the hive partition directory
     # (the convention every other sink's store follows): writing it as
     # a data column too would make the root-level read depend on
     # Spark's data/partition schema-overlap dedup, which other readers
@@ -1124,18 +1062,14 @@ def apply_pagerank_refresh_batch(
     # duplicate column (ADVICE r13). The emitted ranks below keep the
     # literal column because consumers read that leaf directly.
     batch_edges = batch_df.groupBy("c", "s").agg(F.count(F.lit(1)).alias("w"))
-    (
-        batch_edges.write.mode("overwrite").parquet(
-            os.path.join(store_dir, f"batch_id={batch_id}")
-        )
-    )
-    # cumulative edges: sum the per-batch weights per pair (this
-    # batch's own partition INCLUDED — ranks reflect post-ingest state)
     cum = (
-        spark.read.parquet(store_dir)
+        edges.prior(batch_df.sparkSession, batch_id, "c long, s long, w long")
+        .select("c", "s", "w")
+        .unionByName(batch_edges)
         .groupBy("c", "s")
         .agg(F.sum("w").alias("w"))
     )
+    edges.put(batch_edges, batch_id)
     w_c = Window.partitionBy("c")
     w_s = Window.partitionBy("s")
     e = cum.withColumn("wc", F.sum("w").over(w_c)).withColumn(
@@ -1151,6 +1085,4 @@ def apply_pagerank_refresh_batch(
             F.lit(batch_id).cast("long").alias("batch_id"),
         )
     )
-    top.write.mode("overwrite").parquet(
-        os.path.join(out_dir, f"batch_id={batch_id}")
-    )
+    out.put(top, batch_id)

@@ -6,11 +6,12 @@ Synthesizes sf≈1 locally (10 shifted copies of sf0.1 written once to
 small sf and linear-in-rows at large sf is healthy; superlinear growth
 exposes a shuffle or spill problem before a real cluster would.
 
-Usage: python tools/scale_probe.py [--rebuild]
+Usage: python tools/scale_probe.py [--full | --duckdb | --sf3] [--rebuild]
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 import time
@@ -396,10 +397,31 @@ def sf3_probe() -> None:
 
 
 def main() -> None:
-    if "--sf3" in sys.argv:
+    parser = argparse.ArgumentParser(
+        description="Time the headline queries from sf0.001 to sf~1."
+    )
+    mode = parser.add_mutually_exclusive_group()
+    mode.add_argument(
+        "--full",
+        action="store_true",
+        help="full-surface sf~1 soak, Spark side -> SCALE_FULL.json",
+    )
+    mode.add_argument(
+        "--duckdb",
+        action="store_true",
+        help="DuckDB side of the soak (run after --full)",
+    )
+    mode.add_argument(
+        "--sf3", action="store_true", help="30x growth spot-reads -> SCALE3.json"
+    )
+    parser.add_argument(
+        "--rebuild", action="store_true", help="rebuild the sf~1 copy first"
+    )
+    args = parser.parse_args()
+    if args.sf3:
         sf3_probe()
         return
-    if "--duckdb" in sys.argv:
+    if args.duckdb:
         duckdb_soak()
         return
 
@@ -409,10 +431,10 @@ def main() -> None:
     spark = build_session(master="local[32]", shuffle_partitions=32)
     spark.sparkContext.setLogLevel("ERROR")
 
-    if "--rebuild" in sys.argv or not os.path.exists(SCALE_DIR):
+    if args.rebuild or not os.path.exists(SCALE_DIR):
         build(spark)
 
-    if "--full" in sys.argv:
+    if args.full:
         full_soak(spark, entry.all_queries())
         spark.stop()
         return
